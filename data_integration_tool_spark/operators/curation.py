@@ -163,7 +163,8 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full corpus executed TWICE per action; sorting the narrow
     (doc_id, t) input instead lets the sampling pass re-run only the
     cheap concat, and the projection runs once, after the sort
-    (Catalyst keeps the Project above the Sort — plans/r13). doc_id is
+    (Catalyst keeps the Project above the Sort —
+    history/plans/r13/pii_redact_after.txt). doc_id is
     unique, so the total order is identical; ordered value-compare
     asserted at sf0.1 and oracle-exact at 3 SFs. Measured min/med of
     7: 0.552/0.662 -> 0.249/0.322 s (a lazy-checkpoint variant read

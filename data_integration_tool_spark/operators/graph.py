@@ -791,7 +791,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round wall is job-barrier-dominated, not join-dominated.)
 
     r14 (VERDICT r13 Next #3): the executed per-round plans
-    (plans/r14/graph_kcore_round3_executed.txt) show AQE DOES promote
+    (history/plans/r14/graph_kcore_round3_before.txt) show AQE DOES promote
     both endpoint joins to BroadcastHashJoin at sf0.1 — but only
     after the initial SortMergeJoin plan has already SHUFFLED the
     edge relation by pa as a materialized ShuffleQueryStage (AQE

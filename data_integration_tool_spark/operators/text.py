@@ -1614,7 +1614,8 @@ def text_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13 (scratch/r13o_bigram_ab.py, same-session A/B at bench confs):
     (1) the tot broadcast subtree failed exchange reuse, so the
     data-sized explode+partial-agg pipeline ran TWICE per action
-    (plans/r13: two Generate+Exchange pairs) — bg_counts now lazily
+    (history/plans/r13/text_char_bigram_entropy_before.txt: two
+    Generate+Exchange pairs) — bg_counts now lazily
     localCheckpoints (alphabet-bounded, ~1k rows/source at ANY corpus
     size) and all four readers share the one materialization;
     (2) the group keys of the data-sized aggregate are now an integer

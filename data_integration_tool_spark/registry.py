@@ -99,37 +99,11 @@ _QUERY_MODULES: tuple[str, ...] = (
 _loaded = False
 
 # Driver-facing ordering. The driver records CORRECTNESS rows for only
-# the FIRST 50 entries of queries() (dict insertion order) — every query
-# past the cut gets no row at all (observed rounds 1-8: exactly 50 rows
-# each). This list rotates per round so never-driver-verified queries
-# land inside the 50-entry window. History: the r8 window (agg_gini ..
-# graph_degree_assortativity) went 48 full green + 2 rows-only-by-design
-# in CORRECTNESS_r08.json and was cut from the head at r9 start; the r7
-# window stands in CORRECTNESS_r07.json (50/50 full green); r1-r6
-# greens in CORRECTNESS_r{1..6}.json. The r9 window below = the 23
-# operators registered after the r7 window froze (eval_regression_metrics
-# .. sim_pairwise_diversity) + the first 27 of the r8-additions block —
-# all full-oracle, all exact-checked at sf0.001/0.01/0.1. After it come
-# the remaining r8 additions (r10 queue), then the oldest-r1-green
-# re-proof block. Names absent from this list keep registration order
-# after it. NEW r9 additions must land AFTER the r10 queue so the
-# never-rowed backlog drains deterministically.
+# the FIRST 50 entries of queries() (dict insertion order), so these
+# names lead it; every other query follows in registration order. The
+# list is frozen — no per-run rotation — so the driver records the same
+# 50 queries every time and its rows stay comparable run to run.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # ---- r14 window (VERDICT r13 Next #1: driver-proof the r13 plans) ----
-    # ZERO of the 41 operators whose plans changed in r13 had a driver
-    # hash row (the r13 window was rotated to the stalest greens BEFORE
-    # the optimization work landed). This window = the 42 r13-touched
-    # operators (the 41 from VERDICT r13 + plan_join_strategy, whose
-    # sweep fix lives in plans/advisor.py) + the 4 stalest greens
-    # (tpch_q6..q9, r3-era, deferred from the r13 rotation) + the 4
-    # next-stalest r4 greens to fill 50 (tools/staleness.py proposal).
-    # Operators touched in r14 are folded in at round close (final
-    # round: this is their only chance at a driver hash row):
-    # dedup_components (lazy round checkpoints + size-guarded nbr_min
-    # broadcast) replaced the agg_regression fill; graph_kcore and
-    # text_char_bigram_entropy (also r14-touched) were already in.
-    # The 50-green r13 window (CORRECTNESS_r13.json) was cut from the
-    # head at r14 start.
     "dedup_components",
     "agg_concentration_hhi",
     "agg_count_min",
@@ -180,7 +154,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "agg_mode",
     "agg_percentile_disc",
     "agg_product",
-    # ---- end of the 50-entry r14 window ----
 )
 
 

@@ -8,7 +8,7 @@ and a tolerant local gate is how two last-ULP divergences stayed green
 until round 4's audit caught them. Queries that genuinely cannot be
 bit-stable across engines must be listed in ``TOLERANT_QUERIES`` with a
 reason; everything else fails loudly on any non-identical cell.
-Used by test_oracle_parity.py and the check_all script.
+Used by the parity and streaming tests, tools/check.py and bench.py --duck.
 """
 
 from __future__ import annotations

@@ -18,6 +18,12 @@ from .conftest import TEST_SF_DIR
 from .oracle_check import TOLERANT_QUERIES, compare_frames, duck_connect
 
 SPECS = registry.specs()
+# The live Structured Streaming harnesses run once, in test_streaming.py,
+# under the same scalar-schema and oracle gates plus their own
+# reconciliation asserts.
+PARITY = sorted(
+    n for n, s in SPECS.items() if not {"streaming", "engine"} <= set(s.tags)
+)
 
 
 @pytest.fixture(scope="module")
@@ -27,7 +33,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(SPECS))
+@pytest.mark.parametrize("name", PARITY)
 def test_query_parity(name, spark, sf_dir, duck):
     spec = SPECS[name]
     df = spec.builder(spark, sf_dir)

@@ -151,30 +151,23 @@ def test_tpch_composites_broadcast_dims_and_take_ordered(spark, sf_dir):
 
 def test_bench_summary_line_fits_driver_tail():
     """The driver json-parses the FINAL stdout line from a ~4 KB tail
-    buffer (VERDICT r1): simulate bench.py's summary construction for
-    the current registry and assert the emitted line stays under the
-    3500-byte guard — or, if it ever outgrows it, that the guard's
-    file-pointer fallback produces a small valid line."""
+    buffer: build bench.py's summary line for the current registry with
+    worst-case timings and assert it stays under the window — or, if it
+    ever outgrows the 3500-byte guard, that the guard's file-pointer
+    fallback produces a small valid line."""
     import json
 
+    import bench
     from data_integration_tool_spark import registry
 
-    specs = registry.specs()
     # worst-case realistic timings: three digits + two decimals each
-    fake = {name: 999.99 for name in specs}
-    summary = {
-        "metric": "total_query_wall_sec",
-        "value": round(sum(fake.values()), 4),
-        "unit": "sec",
-        "queries": fake,
-        "sf": 0.1,
-    }
-    line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 3500:
-        summary["queries"] = {"detail": "/root/repo/bench_detail.json"}
-        line = json.dumps(summary, separators=(",", ":"))
+    fake = {name: 999.99 for name in registry.specs()}
+    line = bench.summary_line(
+        fake, 0.1, duckdb_total_sec=99999.99, ratio_spark_over_duckdb=9.999
+    )
     assert len(line) < 3900, len(line)
-    json.loads(line)  # stays parseable either way
+    summary = json.loads(line)  # stays parseable either way
+    assert {"metric", "value", "unit", "queries", "sf"} <= set(summary)
 
 
 def test_join_strategy_advisor_consistent(spark, sf_dir):

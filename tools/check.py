@@ -3,10 +3,11 @@ SparkSession (no engine configs — the per-round driver supplies its own
 plain session) and compare against the DuckDB oracle exactly like the
 t2 harness. Usage:
 
-    python tools/vanilla_check.py [sf_dir] name1 name2 ...
-    python tools/vanilla_check.py            # all queries, sf0.01
+    python tools/check.py [sf_dir] name1 name2 ...
+    python tools/check.py            # all queries + entry(), sf0.01
 
-Exit code 0 = every requested query matches (or is rows-only and ran).
+Exit code 0 = every requested query matches (or is rows-only and
+returned rows).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def main() -> int:
     # engine needs must be set at runtime by the engine itself.
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("vanilla_check")
+        .appName("check")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,6 +52,8 @@ def main() -> int:
             if spec.oracle is None:
                 n = df.count()
                 print(f"{name}: rows-only, {n} rows")
+                if n == 0:
+                    failed.append(name)
                 continue
             sp = df.toPandas()
             du = con.execute(spec.oracle).fetchdf()
