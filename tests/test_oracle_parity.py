@@ -18,12 +18,9 @@ from .conftest import TEST_SF_DIR
 from .oracle_check import TOLERANT_QUERIES, compare_frames, duck_connect
 
 SPECS = registry.specs()
-# The live Structured Streaming harnesses run once, in test_streaming.py,
-# under the same scalar-schema and oracle gates plus their own
-# reconciliation asserts.
-PARITY = sorted(
-    n for n, s in SPECS.items() if not {"streaming", "engine"} <= set(s.tags)
-)
+# Live Structured Streaming harnesses: collected once per session and
+# shared with test_streaming.py's reconciliation asserts.
+LIVE = {n for n, s in SPECS.items() if {"streaming", "engine"} <= set(s.tags)}
 
 
 @pytest.fixture(scope="module")
@@ -33,10 +30,14 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", PARITY)
-def test_query_parity(name, spark, sf_dir, duck):
+@pytest.mark.parametrize("name", sorted(SPECS))
+def test_query_parity(name, spark, sf_dir, duck, collected):
     spec = SPECS[name]
-    df = spec.builder(spark, sf_dir)
+    if name in LIVE:
+        schema, rows = collected(name)
+        df = spark.createDataFrame(rows, schema)
+    else:
+        df = spec.builder(spark, sf_dir)
     # Harness contract (CORRECTNESS_r05): the driver's pandas
     # canonicalizer crashes on list/map cells — BEFORE the oracle
     # branch, so even rows-only queries must ship scalar columns only.

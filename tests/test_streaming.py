@@ -10,14 +10,10 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from data_integration_tool_spark import registry
 from data_integration_tool_spark.io import load
 from data_integration_tool_spark.streaming import structured
 from data_integration_tool_spark.streaming.event_windows import stream_tumbling
-
-from .oracle_check import TOLERANT_QUERIES, compare_frames, duck_connect
 
 
 @pytest.fixture(scope="module")
@@ -176,73 +172,44 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, staged):
     assert got == want and got > 0
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connect(sf_dir)
-    yield con
-    con.close()
-
-
-def _harness_row(spark, sf_dir, duck, name):
-    """Run a registered streaming harness ONCE and hold its output to the
-    gates test_oracle_parity applies to every other query: scalar columns
-    only (the driver's pandas canonicalizer crashes on list/map cells)
-    and a match with the DuckDB twin. Returns the one summary Row."""
-    spec = registry.specs()[name]
-    df = spec.builder(spark, sf_dir)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (T.ArrayType, T.MapType))
-    ]
-    assert not bad, f"{name}: driver-visible array/map columns {bad}"
-    rows = df.collect()
-    # pandas from the collected rows: the harness must not run twice
-    sp = spark.createDataFrame(rows, df.schema).toPandas()
-    du = duck.execute(spec.oracle).fetchdf()
-    problems = compare_frames(sp, du, name, exact=name not in TOLERANT_QUERIES)
-    assert not problems, "\n".join(problems)
-    return rows[0]
-
-
-def test_stream_true_engine_reconciles(spark, sf_dir, duck):
+def test_stream_true_engine_reconciles(collected):
     """The registered driver surface: real engine result must fully
     match the batch twin (all_match True, no one-sided windows)."""
-    row = _harness_row(spark, sf_dir, duck, "stream_true_engine")
+    row = collected("stream_true_engine")[1][0]
     assert row.n_windows > 0
     assert row.n_stream == row.n_batch == row.n_windows
     assert row.all_match is True
 
 
-def test_stream_foreach_batch_reconciles(spark, sf_dir, duck):
+def test_stream_foreach_batch_reconciles(collected):
     """Registered foreachBatch surface: one emitted row per key, key
     set identical to batch-distinct, multiple micro-batches seen."""
-    row = _harness_row(spark, sf_dir, duck, "stream_foreach_batch")
+    row = collected("stream_foreach_batch")[1][0]
     assert row.all_match is True
     assert row.n_stream_keys == row.n_batch_keys == row.n_keys > 0
     assert row.multi_batch is True, "expected 2..4 emitting micro-batches"
 
 
-def test_stream_stateful_totals_query_reconciles(spark, sf_dir, duck):
+def test_stream_stateful_totals_query_reconciles(collected):
     """Registered custom-state surface: final per-user state equals the
     batch groupBy (state accumulated across 4 micro-batches)."""
-    row = _harness_row(spark, sf_dir, duck, "stream_stateful_totals")
+    row = collected("stream_stateful_totals")[1][0]
     assert row.all_match is True
     assert row.n_stream == row.n_batch == row.n_users > 0
 
 
-def test_stream_stream_join_query_reconciles(spark, sf_dir, duck):
+def test_stream_stream_join_query_reconciles(collected):
     """Registered stream-stream join surface: pair set identical to the
     batch range join (wide watermark -> exact)."""
-    row = _harness_row(spark, sf_dir, duck, "stream_stream_join")
+    row = collected("stream_stream_join")[1][0]
     assert row.all_match is True
     assert row.n_stream == row.n_batch == row.n_pairs > 0
 
 
-def test_stream_session_true_reconciles(spark, sf_dir, duck):
+def test_stream_session_true_reconciles(collected):
     """Native session_window under the real engine: every session's
     (start, count, total) matches the µs-precision batch gap-and-cumsum
     twin, and streaming ends equal batch last-event ts + gap."""
-    row = _harness_row(spark, sf_dir, duck, "stream_session_true")
+    row = collected("stream_session_true")[1][0]
     assert row.all_match is True
     assert row.n_stream == row.n_batch == row.n_sessions > 0
