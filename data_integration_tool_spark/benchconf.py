@@ -1,13 +1,12 @@
-"""Shared bench-session configuration (ADVICE r12 #1).
+"""Per-query bench-session configuration.
 
-bench.py and tools/interleaved_bench.py must apply the SAME per-query
-conf split (shuffle partitions, AQE) or the burst-robust interleaved
-ratio stops comparing like-for-like with the standard legs. The split
-was hand-copied between the two files in r12; this module is now the
-single source of truth both import.
+Every timing harness applies ONE per-query conf split (shuffle
+partitions, AQE), and it lives here: ``bench.py`` (default run and
+``--duck``) and ``perfbench/`` both call ``apply_query_conf`` with the
+sets below, so their timings compare like for like.
 
-The classification rationale (measured at sf0.1, rounds 9-11) lives
-with the sets here; see BASELINE.md for the round-by-round numbers.
+The classification rationale (measured at sf0.1) lives with the sets
+here; see BASELINE.md for the numbers.
 """
 
 from __future__ import annotations

@@ -3,15 +3,21 @@
 Each helper exists in exactly two forms that MUST stay in lockstep: a
 PySpark Column builder and a DuckDB SQL fragment (``*_SQL``, used via
 ``.format`` inside oracle strings). Keeping both in one module is the
-point — this round's 2^32 lpad-truncation bug had to be fixed in two
-copies of the cutoff arithmetic; a third copy would have silently
-diverged. When the arithmetic changes, change it HERE, in both forms.
+point: arithmetic copied into a builder can drift from its oracle twin
+without any test noticing. When the arithmetic changes, change it
+HERE, in both forms.
+
+Builder Column code quantises to micro-units or cents ONLY through
+``micro`` and ``cents``; tests/test_exprs_lockstep.py fails on any
+inline ``F.floor(x * 1e6 + 0.5)`` or ``F.floor(x * 100 + 0.5)``
+elsewhere in the package. Other scales (x1e9, x1e12) stay inline.
 
 House rules encoded here (see registry.py's harness contract):
 - ``micro``: floats that cross a ln()/summation-order/rounding boundary
   ship as micro-unit BIGINTs — ``floor(x*1e6 + 0.5)``. floor(x+0.5) is
   deliberate: Spark ``F.round`` (HALF_UP) and DuckDB ``round()``
   disagree on halfway ties; floor(x+0.5) is identical everywhere.
+  ``cents`` is the same rule at x100 for 2-decimal money columns.
 - ``hash_cutoff``: a sampling rate in [0, 1) becomes an 8-hex-char
   threshold comparable against an md5 prefix. The integer is clamped to
   2^32-1 because a rate within ~2^-21 of 1.0 floors to exactly 2^32,

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..exprs import cents
 from ..io import load
 from ..registry import query
 
@@ -211,7 +212,7 @@ def fn_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</key><status>"),
         F.col("o_orderstatus"),
         F.lit("</status><cents>"),
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("bigint"),
+        cents(F.col("o_totalprice")),
         F.lit("</cents></order>"),
     )
     parsed = o.select(

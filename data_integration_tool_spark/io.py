@@ -27,9 +27,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale.
-DIM_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier"})
-
 
 # Opt-in per-session table cache (SPARK_GRAFT_CACHE_TABLES=1): the bench
 # harness reuses one SparkSession across ~90 queries, so persisting each
@@ -86,11 +83,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         df = df.persist()
         _TABLE_CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table (lazy — no I/O until an action runs)."""
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -824,11 +824,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_suppkey",
             F.col("hits").cast("bigint").alias("hits"),
-            F.floor(
-                F.col("hits").cast("double") / F.col("total") * 1000000.0
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("hits").cast("double") / F.col("total"))
             .alias("share_micro"),
         )
         .orderBy(F.desc("hits"), F.asc("l_suppkey"))
@@ -1067,9 +1063,7 @@ def agg_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.join(sums, "flag").select(
         "flag",
         "exact_distinct",
-        F.floor(est * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("hll_est_micro"),
+        micro(est).alias("hll_est_micro"),
     )
 
 
@@ -1255,10 +1249,7 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 " the quantization grid') AS BIGINT)"
                                 " END"
                             ).alias("n_rows"),
-                            F.floor(
-                                F.expr(_pearson_sql(a, b)) * 1000000.0 + F.lit(0.5)
-                            )
-                            .cast("bigint")
+                            micro(F.expr(_pearson_sql(a, b)))
                             .alias("corr_micro"),
                         )
                         for a, b in _CORR_PAIRS
@@ -1398,9 +1389,7 @@ def agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_equal") == F.col("n_buckets")).cast("bigint").alias(
             "merge_lossless"
         ),
-        F.floor(est_expr * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("hll_est_micro"),
+        micro(est_expr).alias("hll_est_micro"),
     )
 
 
@@ -1454,11 +1443,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents(F.col("o_totalprice"))).cast("bigint").alias("cents")
     )
     ranked = per_cust.select(
         "cents",
@@ -1478,7 +1463,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moments.select(
         F.col("n").alias("n_customers"),
         F.col("total").alias("total_cents"),
-        F.floor(gini * 1000000.0 + F.lit(0.5)).cast("bigint").alias("gini_micro"),
+        micro(gini).alias("gini_micro"),
     )
 
 
@@ -1760,12 +1745,8 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         "s2",
         "q2",
-        F.floor(F.expr(_TT_T) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("t_micro"),
-        F.floor(F.expr(_TT_DF) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("df_micro"),
+        micro(F.expr(_TT_T)).alias("t_micro"),
+        micro(F.expr(_TT_DF)).alias("df_micro"),
     )
 
 
@@ -1855,9 +1836,7 @@ def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("dof"),
-        F.floor(F.sum("contrib") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("chi2_micro"),
+        micro(F.sum("contrib")).alias("chi2_micro"),
     )
 
 
@@ -1937,11 +1916,7 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v").cast("bigint").alias("s_g"),
         F.sum(F.col("v") * F.col("v")).cast("bigint").alias("q_g"),
     )
-    cm = F.floor(
-        F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
+    cm = micro(F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g"))
     m = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("n_g").cast("bigint").alias("n_tot"),
@@ -1955,15 +1930,9 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_tot",
         "q_tot",
         "cm_sum",
-        F.floor(F.expr(_ANOVA_SSB) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ssb_micro"),
-        F.floor(F.expr(_ANOVA_SSW) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ssw_micro"),
-        F.floor(F.expr(_ANOVA_F) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("f_micro"),
+        micro(F.expr(_ANOVA_SSB)).alias("ssb_micro"),
+        micro(F.expr(_ANOVA_SSW)).alias("ssw_micro"),
+        micro(F.expr(_ANOVA_F)).alias("f_micro"),
     )
 
 
@@ -2046,9 +2015,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_quantity") + F.lit(0.5))
         .cast("bigint")
         .alias("x"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("y"),
+        cents(F.col("l_extendedprice")).alias("y"),
     )
 
     def doubled_ranks(col: str, alias: str) -> DataFrame:
@@ -2089,9 +2056,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sxy",
         "sxx",
         "syy",
-        F.floor(F.expr(_SPEAR_RHO) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("rho_micro"),
+        micro(F.expr(_SPEAR_RHO)).alias("rho_micro"),
     )
 
 
@@ -2221,14 +2186,10 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("mi_micro"),
-        F.floor(
+        micro(
             F.col("mi_pico").cast("double")
             / F.sqrt(F.col("hx_pico").cast("double") * F.col("hy_pico"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("nmi_micro"),
+        ).alias("nmi_micro"),
     )
 
 
@@ -2280,9 +2241,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain (not the row count) bounds the window input."""
     li = load(spark, sf_dir, "lineitem")
     vals = li.select(
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents(F.col("l_extendedprice")).alias("v"),
         F.floor(F.col("l_quantity") + F.lit(0.5))
         .cast("bigint")
         .alias("w"),
@@ -2420,21 +2379,12 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         "n_inter",
-        F.floor(
-            F.col("inter_kmv").cast("double") / F.col("k_eff")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("inter_kmv").cast("double") / F.col("k_eff"))
         .alias("jaccard_est_micro"),
-        F.floor(
+        micro(
             F.col("n_inter").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("jaccard_true_micro"),
+        ).alias("jaccard_true_micro"),
         F.floor(
             (F.col("k_eff") - F.lit(1.0))
             / (F.col("u_k").cast("double") / F.lit(4294967296.0))
@@ -2545,9 +2495,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r",
         "c",
         "chi2_pico",
-        F.floor(F.expr(_CV_V) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("v_micro"),
+        micro(F.expr(_CV_V)).alias("v_micro"),
     )
 
 
@@ -2620,9 +2568,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").isin("R", "A")
     )
     vals = li.select(
-        F.floor(F.col("l_extendedprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents(F.col("l_extendedprice")).alias("v"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("g1"),
     )
     per_v = vals.groupBy("v").agg(
@@ -2662,9 +2608,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         "u2",
         "ties",
-        F.floor(F.expr(_MW_Z) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("z_micro"),
+        micro(F.expr(_MW_Z)).alias("z_micro"),
     )
 
 
@@ -2742,9 +2686,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized rank window, a single-row fold."""
     li = load(spark, sf_dir, "lineitem")
     vals = li.select(
-        F.floor(F.col("l_extendedprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents(F.col("l_extendedprice")).alias("v"),
         F.col("l_returnflag").alias("g"),
     )
     per_v = vals.groupBy("v").agg(
@@ -2785,12 +2727,8 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "na",
         "nn",
         "ties",
-        F.floor(F.expr(_KW_H) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("h_micro"),
-        F.floor(F.expr(_KW_HC) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("hc_micro"),
+        micro(F.expr(_KW_H)).alias("h_micro"),
+        micro(F.expr(_KW_HC)).alias("hc_micro"),
     )
 
 
@@ -2881,15 +2819,9 @@ def agg_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n01",
         "n10",
         "n11",
-        F.floor(
-            (F.col("n00") + F.col("n11")).cast("double")
-            / F.col("n")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro((F.col("n00") + F.col("n11")).cast("double") / F.col("n"))
         .alias("po_micro"),
-        F.floor(
+        micro(
             (
                 (F.col("n00") + F.col("n01"))
                 * (F.col("n00") + F.col("n10"))
@@ -2897,14 +2829,8 @@ def agg_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.col("n01") + F.col("n11"))
             ).cast("double")
             / (F.col("n").cast("double") * F.col("n"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("pe_micro"),
-        F.floor(F.expr(_KAPPA) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("kappa_micro"),
+        ).alias("pe_micro"),
+        micro(F.expr(_KAPPA)).alias("kappa_micro"),
     )
 
 
@@ -2959,11 +2885,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary rank window (agg_mann_whitney's cost class), one-row
     fold. No sort of the data itself, no percentile sketch."""
     o = load(spark, sf_dir, "orders")
-    vals = o.select(
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v")
-    )
+    vals = o.select(cents(F.col("o_totalprice")).alias("v"))
     per_v = vals.groupBy("v").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -3073,9 +2995,7 @@ def agg_approx_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = m.select(
         "nd_ck",
         "nd_pr",
-        F.floor(F.col("med_exact") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("med_cents"),
+        cents(F.col("med_exact")).alias("med_cents"),
         (
             F.abs(F.col("ack") - F.col("nd_ck"))
             <= F.col("nd_ck") * F.lit(0.15)
@@ -3213,18 +3133,10 @@ def agg_ratio_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sx",
         "sy",
-        F.floor(F.expr(_RD_R) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ratio_micro"),
-        F.floor(F.expr(_RD_SE) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("se_micro"),
-        F.floor(F.expr(_RD_LO) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("lo_micro"),
-        F.floor(F.expr(_RD_HI) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("hi_micro"),
+        micro(F.expr(_RD_R)).alias("ratio_micro"),
+        micro(F.expr(_RD_SE)).alias("se_micro"),
+        micro(F.expr(_RD_LO)).alias("lo_micro"),
+        micro(F.expr(_RD_HI)).alias("hi_micro"),
     ).orderBy("flag", "status")
 
 
@@ -3336,15 +3248,9 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.expr(_TH_WITHIN) + F.lit(0.5))
             .cast("bigint")
             .alias("theil_within_micro"),
-            F.floor(F.expr(_TH_PSH) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("pop_share_micro"),
-            F.floor(F.expr(_TH_ISH) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("income_share_micro"),
-            F.floor(F.expr(_TH_BETWEEN) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("between_term_micro"),
+            micro(F.expr(_TH_PSH)).alias("pop_share_micro"),
+            micro(F.expr(_TH_ISH)).alias("income_share_micro"),
+            micro(F.expr(_TH_BETWEEN)).alias("between_term_micro"),
         )
         .orderBy("seg")
     )
@@ -3457,13 +3363,7 @@ def agg_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("hhi_micro"),
-            F.floor(
-                F.col("s4").cast("double")
-                / F.col("stot")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("s4").cast("double") / F.col("stot"))
             .alias("cr4_micro"),
             F.floor(F.expr(_HH_ENF) + F.lit(0.5))
             .cast("bigint")
@@ -3612,9 +3512,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     only data-sized stage; the 1-row total broadcast-cross-joins
     back."""
     c = load(spark, sf_dir, "customer")
-    cb = F.floor(F.col("c_acctbal") * F.lit(100.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    cb = cents(F.col("c_acctbal"))
     strata = c.select(
         F.col("c_mktsegment").alias("seg"), cb.alias("b")
     ).groupBy("seg").agg(
@@ -3640,9 +3538,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "seg",
             F.col("n").alias("n_pop"),
-            F.floor(F.expr(_NY_SD) * F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("sd_cents"),
+            cents(F.expr(_NY_SD)).alias("sd_cents"),
             F.floor(F.expr(_NY_ALLOC) + F.lit(0.5))
             .cast("bigint")
             .alias("neyman_n"),
@@ -3793,9 +3689,7 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") - F.col("n_pos")).cast("bigint").alias("n_neg"),
         F.col("w2").alias("w2_pos"),
         "ties",
-        F.floor(F.expr(_WX_Z) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("z_micro"),
+        micro(F.expr(_WX_Z)).alias("z_micro"),
     )
 
 
@@ -3937,15 +3831,9 @@ def agg_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nation",
             F.col("sx").alias("sum_qty"),
             F.col("sy").alias("sum_rev"),
-            F.floor(F.expr(_JK_TG) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("theta_loo_micro"),
-            F.floor(F.expr(_JK_THETA) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("theta_micro"),
-            F.floor(F.expr(_JK_SE) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("jk_se_micro"),
+            micro(F.expr(_JK_TG)).alias("theta_loo_micro"),
+            micro(F.expr(_JK_THETA)).alias("theta_micro"),
+            micro(F.expr(_JK_SE)).alias("jk_se_micro"),
         )
         .orderBy("nation")
     )
@@ -4029,12 +3917,8 @@ def agg_power_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("mde").alias("mde_pct"),
             F.col("n").alias("n_population"),
-            F.floor(F.expr(_PW_MEAN) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("mean_micro"),
-            F.floor(F.expr(_PW_DELTA) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("delta_micro"),
+            micro(F.expr(_PW_MEAN)).alias("mean_micro"),
+            micro(F.expr(_PW_DELTA)).alias("delta_micro"),
             F.expr(_PW_N).cast("bigint").alias("n_per_arm"),
             (F.expr(_PW_N) <= F.col("n") / F.lit(2)).alias("feasible"),
         )
@@ -4116,37 +4000,12 @@ def agg_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seg",
         "n",
         "x",
-        F.floor(
-            F.col("x").cast("double") / F.col("n") * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("mle_micro"),
-        F.floor(F.expr(_BB_MEAN) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("post_mean_micro"),
-        F.floor(F.sqrt(F.expr(_BB_VAR)) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("post_sd_micro"),
-        F.floor(
-            (
-                F.expr(_BB_MEAN)
-                - F.lit(1.959963985) * F.sqrt(F.expr(_BB_VAR))
-            )
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("x").cast("double") / F.col("n")).alias("mle_micro"),
+        micro(F.expr(_BB_MEAN)).alias("post_mean_micro"),
+        micro(F.sqrt(F.expr(_BB_VAR))).alias("post_sd_micro"),
+        micro(F.expr(_BB_MEAN) - F.lit(1.959963985) * F.sqrt(F.expr(_BB_VAR)))
         .alias("lo_micro"),
-        F.floor(
-            (
-                F.expr(_BB_MEAN)
-                + F.lit(1.959963985) * F.sqrt(F.expr(_BB_VAR))
-            )
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.expr(_BB_MEAN) + F.lit(1.959963985) * F.sqrt(F.expr(_BB_VAR)))
         .alias("hi_micro"),
     ).orderBy("seg")
 
@@ -4222,15 +4081,9 @@ def agg_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("mean_ln_micro"),
-        F.floor(
-            F.exp(
-                F.col("s").cast("double") / F.col("n") / F.lit(1000000000.0)
-            )
-            * F.lit(100.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("geomean_cents"),
+        cents(
+            F.exp(F.col("s").cast("double") / F.col("n") / F.lit(1000000000.0))
+        ).alias("geomean_cents"),
     ).orderBy("seg")
 
 
@@ -4293,14 +4146,10 @@ def agg_harmonic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "seg",
         "n",
-        F.floor(
+        cents(
             F.col("n").cast("double")
             / (F.col("s").cast("double") / F.lit(1e12))
-            * F.lit(100.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("harmonic_mean_cents"),
+        ).alias("harmonic_mean_cents"),
     ).orderBy("seg")
 
 
@@ -4379,13 +4228,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("s_nationkey").alias("k"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("x"),
-            F.sum(
-                F.floor(
-                    F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)
-                ).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("y"),
+            F.sum(cents(F.col("l_extendedprice"))).cast("bigint").alias("y"),
         )
     ).localCheckpoint(eager=True)
     a = g.alias("a")
@@ -4415,9 +4258,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").alias("n_ties_y"),
             F.when(
                 (F.col("n0") > F.col("n1")) & (F.col("n0") > F.col("n2")),
-                F.floor(tau * F.lit(1000000.0) + F.lit(0.5)).cast(
-                    "bigint"
-                ),
+                micro(tau),
             ).alias("tau_b_micro"),
         )
     )
@@ -4715,11 +4556,7 @@ def agg_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("zv").cast("bigint").alias("s_g"),
         F.sum(F.col("zv") * F.col("zv")).cast("bigint").alias("q_g"),
     )
-    cm = F.floor(
-        F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
+    cm = micro(F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g"))
     m = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("n_g").cast("bigint").alias("n_tot"),
@@ -4733,15 +4570,9 @@ def agg_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_tot",
         "q_tot",
         "cm_sum",
-        F.floor(F.expr(_ANOVA_SSB) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ssb_micro"),
-        F.floor(F.expr(_ANOVA_SSW) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ssw_micro"),
-        F.floor(F.expr(_ANOVA_F) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("w_micro"),
+        micro(F.expr(_ANOVA_SSB)).alias("ssb_micro"),
+        micro(F.expr(_ANOVA_SSW)).alias("ssw_micro"),
+        micro(F.expr(_ANOVA_F)).alias("w_micro"),
     )
 
 
@@ -4866,7 +4697,7 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("mid")
         )
     )
-    c = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint")
+    c = cents(F.col("value"))
     per_user = (
         e.crossJoin(span)
         .groupBy("user_id", "mid")
@@ -4931,18 +4762,11 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("variant").cast("bigint").alias("variant"),
             F.col("nv").alias("n_users"),
-            F.floor(
-                F.col("syv").cast("double")
-                / F.col("nv")
-                / F.lit(100.0)
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("syv").cast("double") / F.col("nv") / F.lit(100.0))
             .alias("mean_y_micro"),
             F.when(
                 th.isNotNull(),
-                F.floor(
+                micro(
                     (
                         F.col("syv").cast("double") / F.col("nv")
                         - th
@@ -4952,20 +4776,15 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
                         )
                     )
                     / F.lit(100.0)
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                ),
             ).alias("mean_y_adj_micro"),
             F.when(
                 th.isNotNull(),
-                F.floor(th * F.lit(1000000.0) + F.lit(0.5)).cast("bigint"),
+                micro(th),
             ).alias("theta_micro"),
             F.when(
                 th.isNotNull() & (F.col("nv") > 1) & (vy > 0.0),
-                F.floor(
-                    (F.lit(1.0) - adj_var / vy) * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.lit(1.0) - adj_var / vy),
             ).alias("var_reduction_micro"),
         )
         .orderBy("variant")
@@ -5040,15 +4859,11 @@ def agg_tail_index_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ranks ≤ 201 survive the conditional sums — one 1-row wide
     aggregate answers all three k, then a 3-row stack."""
     o = load(spark, sf_dir, "orders")
-    cents_v = F.floor(
-        F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)
-    ).cast("bigint")
+    cents_v = cents(F.col("o_totalprice"))
     w = Window.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     ranked = o.select(
         cents_v.alias("cents"),
-        F.floor(F.log(cents_v) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("lnm"),
+        micro(F.log(cents_v)).alias("lnm"),
         F.row_number().over(w).alias("rnk"),
     ).filter(F.col("rnk") <= max(_HILL_KS) + 1)
     aggs = []
@@ -5241,12 +5056,7 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(
                 F.abs(
                     F.col("lang_mass")
-                    - F.floor(
-                        F.col("n_total").cast("double")
-                        / F.col("n_langs")
-                        * F.lit(1000000.0)
-                        + F.lit(0.5)
-                    ).cast("bigint")
+                    - micro(F.col("n_total").cast("double") / F.col("n_langs"))
                 )
             )
             .cast("bigint")
@@ -5369,42 +5179,29 @@ def agg_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x_a",
         "n_b",
         "x_b",
-        F.floor(ra * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("rate_a_micro"),
-        F.floor(rb * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("rate_b_micro"),
-        F.floor((rb - ra) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("diff_micro"),
+        micro(ra).alias("rate_a_micro"),
+        micro(rb).alias("rate_b_micro"),
+        micro(rb - ra).alias("diff_micro"),
         F.when(
             (F.col("x_a") + F.col("x_b") > 0)
             & (F.col("x_a") + F.col("x_b") < F.col("n_a") + F.col("n_b")),
-            F.floor(
+            micro(
                 (rb - ra)
                 / F.sqrt(
                     pp
                     * (F.lit(1.0) - pp)
                     * (
-                        F.lit(1.0) / F.col("n_a")
-                        + F.lit(1.0) / F.col("n_b")
+                        F.lit(1.0) / F.col("n_a") + F.lit(1.0) / F.col("n_b")
                     )
                 )
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            ),
         ).alias("z_micro"),
-        F.floor(
+        micro(
             F.sqrt(
                 ra * (F.lit(1.0) - ra) / F.col("n_a")
                 + rb * (F.lit(1.0) - rb) / F.col("n_b")
             )
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("se_unpooled_micro"),
+        ).alias("se_unpooled_micro"),
     )
 
 
@@ -5484,11 +5281,7 @@ def agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         "m",
         F.floor(chap + F.lit(0.5)).cast("bigint").alias("chapman_est"),
-        F.floor(
-            chap / F.col("n_true") * F.lit(1000000.0) + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("est_over_true_micro"),
+        micro(chap / F.col("n_true")).alias("est_over_true_micro"),
         F.floor(
             F.sqrt(
                 (

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import MICRO_SQL, micro
+from ..exprs import MICRO_SQL, cents, micro
 from ..io import load
 from ..registry import query
 
@@ -1404,7 +1404,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     from pyspark.sql import Window
 
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    price_cents = cents(F.col("o_totalprice"))
     firsts = o.groupBy("o_custkey").agg(
         F.min(F.date_trunc("month", "o_orderdate")).alias("cohort_mo")
     )
@@ -1418,7 +1418,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cohort_mo"),
             month_idx.alias("month_idx"),
         )
-        .agg(F.sum(cents).alias("cents"))
+        .agg(F.sum(price_cents).alias("cents"))
     )
     w = Window.partitionBy("cohort_mo").orderBy("month_idx")
     return rev.select(
@@ -1865,9 +1865,7 @@ def win_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seq = li.select(
         "l_partkey",
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("price_cents"),
+        cents(F.col("l_extendedprice")).alias("price_cents"),
         F.datediff(
             F.lead("l_shipdate").over(w).cast("date"),
             F.col("l_shipdate").cast("date"),
@@ -2180,16 +2178,11 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (F.col("n") > 1) & (varx_n > 0.0),
-            F.floor(cov_n / varx_n * F.lit(1000000.0) + F.lit(0.5)).cast(
-                "bigint"
-            ),
+            micro(cov_n / varx_n),
         ).alias("elasticity_micro"),
         F.when(
             (F.col("n") > 1) & (varx_n > 0.0) & (vary_n > 0.0),
-            F.floor(
-                cov_n * cov_n / (varx_n * vary_n) * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            micro(cov_n * cov_n / (varx_n * vary_n)),
         ).alias("r2_micro"),
     ).orderBy("p_brand")
 
@@ -2253,14 +2246,7 @@ def orders_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase selection instead), a 3-row class reduce."""
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
-        F.sum(
-            F.floor(
-                F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * F.lit(100.0)
-                + F.lit(0.5)
-            ).cast("bigint")
-        )
+        F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
         .cast("bigint")
         .alias("cents")
     )
@@ -2285,13 +2271,7 @@ def orders_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_parts"),
             F.sum("cents").cast("bigint").alias("revenue_cents"),
-            F.floor(
-                F.sum("cents").cast("double")
-                / F.max("total")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum("cents").cast("double") / F.max("total"))
             .alias("revenue_share_micro"),
         )
         .orderBy("abc_class")

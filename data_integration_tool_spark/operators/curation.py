@@ -814,9 +814,7 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "n_docs",
-            F.floor(F.col("w") / F.col("wsum") * 1000000.0 + F.lit(0.5))
-            .cast("bigint")
-            .alias("share_micro"),
+            micro(F.col("w") / F.col("wsum")).alias("share_micro"),
             F.floor(
                 F.col("w") / F.col("wsum") * F.col("total_docs") + F.lit(0.5)
             )
@@ -1482,9 +1480,7 @@ def mixture_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = bysrc.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
-        F.floor(F.expr(_KL_P) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("share_micro"),
+        micro(F.expr(_KL_P)).alias("share_micro"),
         F.floor(F.expr(_KL_TERM) * F.lit(1e12) + F.lit(0.5))
         .cast("bigint")
         .alias("kl_term_pico"),
@@ -1840,13 +1836,7 @@ def sample_ess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = bylang.crossJoin(tot).select(
         "lang",
         "n_docs",
-        F.floor(
-            F.col("total").cast("double")
-            / (F.col("k") * F.col("n_docs"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("total").cast("double") / (F.col("k") * F.col("n_docs")))
         .alias("weight_micro"),
         "total",
     )
@@ -1874,11 +1864,7 @@ def sample_ess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "weight_micro",
             F.floor(ess_docs + F.lit(0.5)).cast("bigint").alias("ess_docs"),
-            F.floor(
-                ess_docs / F.col("total") * F.lit(1000000.0) + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("ess_ratio_micro"),
+            micro(ess_docs / F.col("total")).alias("ess_ratio_micro"),
         )
         .orderBy("lang")
     )
@@ -1961,14 +1947,10 @@ def feat_frequency_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("train_count"), F.lit(0))
             .cast("bigint")
             .alias("train_count"),
-            F.floor(
+            micro(
                 F.coalesce(F.col("train_count"), F.lit(0)).cast("double")
                 / F.col("n_train")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("freq_micro"),
+            ).alias("freq_micro"),
         )
         .orderBy("event_id")
     )
@@ -2138,13 +2120,7 @@ def decon_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("f_ngram").cast("bigint").alias("n_ngram"),
             F.sum("f_contain").cast("bigint").alias("n_containment"),
             F.sum(any_f).cast("bigint").alias("n_any"),
-            F.floor(
-                F.sum(any_f).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum(any_f).cast("double") / F.count(F.lit(1)))
             .alias("any_rate_micro"),
         )
         .orderBy("source")

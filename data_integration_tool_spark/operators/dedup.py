@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..exprs import splitmix64
+from ..exprs import micro, splitmix64
 from ..io import load
 from ..registry import query
 
@@ -866,7 +866,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameters switch to pointer-jumping (label = label[label]) for
     O(log n) rounds — same loop shape.
     """
-    from .graph import _latest_ckpt_bytes
+    from .graph import _ckpt_bytes
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
@@ -887,7 +887,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a strictly decreasing potential — sum unchanged ⇔ fixpoint. One
     # cheap aggregate action per round instead of a join-and-count.
     prev_sum = labels.agg(F.sum("component_id")).collect()[0][0]  # driver-scalar: convergence potential
-    labels_bytes = _latest_ckpt_bytes(spark)
+    labels_bytes = _ckpt_bytes(labels)
     for _ in range(50):
         nbr_min = (
             edges.join(labels, edges.doc_b == labels.doc_id)
@@ -918,7 +918,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         new_sum = labels.agg(F.sum("component_id")).collect()[0][0]  # driver-scalar: convergence potential (materializes the lazy checkpoint)
-        labels_bytes = _latest_ckpt_bytes(spark)
+        labels_bytes = _ckpt_bytes(labels)
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -1086,9 +1086,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum((F.col("cnt") >= 2).cast("bigint")).alias("n_dup_shingles"),
-            F.floor(F.sum(dup) / F.count(F.lit(1)) * 1000000.0 + F.lit(0.5))
-            .cast("bigint")
-            .alias("dup_frac_micro"),
+            micro(F.sum(dup) / F.count(F.lit(1))).alias("dup_frac_micro"),
         )
         .orderBy("doc_id")
     )
@@ -1320,21 +1318,13 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_banded",
         F.when(
             F.col("n_truth") > 0,
-            F.floor(
-                F.col("n_banded").cast("double") / F.col("n_truth")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            micro(F.col("n_banded").cast("double") / F.col("n_truth")),
         ).alias("banding_recall_micro"),
         F.col("n_cand").alias("n_cand_same_source"),
         "n_cand_true",
         F.when(
             F.col("n_cand") > 0,
-            F.floor(
-                F.col("n_cand_true").cast("double") / F.col("n_cand")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            micro(F.col("n_cand_true").cast("double") / F.col("n_cand")),
         ).alias("precision_micro"),
     )
 
@@ -1409,9 +1399,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.least("src_a", "src_b").alias("source_a"),
             F.greatest("src_a", "src_b").alias("source_b"),
-            F.floor(F.col("est_jaccard") * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("jm"),
+            micro(F.col("est_jaccard")).alias("jm"),
         )
     )
     return (
@@ -1733,11 +1721,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             surv.cast("bigint").alias("n_survivors"),
             "bytes_total",
             "bytes_surviving",
-            F.floor(
-                surv.cast("double") / F.col("n_docs") * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(surv.cast("double") / F.col("n_docs"))
             .alias("survival_micro"),
         )
         .orderBy("source")

@@ -143,12 +143,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "idcg_num",
         F.when(
             F.col("idcg_num") > 0,
-            F.floor(
-                F.col("dcg_num").cast("double")
-                / F.col("idcg_num")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            micro(F.col("dcg_num").cast("double") / F.col("idcg_num")),
         ).alias("ndcg_micro"),
     ).orderBy("user_id")
 
@@ -361,16 +356,12 @@ def eval_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_pos",
         "cum_n",
         "cum_pos",
-        F.floor(
+        micro(
             F.col("cum_pos").cast("double")
             * F.col("nn")
             / F.col("cum_n")
             / F.col("tot_pos")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lift_micro"),
+        ).alias("lift_micro"),
         F.floor(
             F.col("cum_pos").cast("double")
             * F.lit(1000000.0)
@@ -459,15 +450,9 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = cum.select(
         "cnt",
         "pos_s",
-        F.floor(
-            F.col("cum_pos").cast("double")
-            * F.col("pos_s")
-            / F.col("cum_n")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("term_micro"),
+        micro(
+            F.col("cum_pos").cast("double") * F.col("pos_s") / F.col("cum_n")
+        ).alias("term_micro"),
     )
     return terms.agg(
         F.sum("pos_s").cast("bigint").alias("n_pos"),
@@ -595,16 +580,9 @@ def eval_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("sae_micro").cast("double") / F.col("n") + F.lit(0.5))
         .cast("bigint")
         .alias("mae_micro"),
-        F.floor(
-            F.sqrt(F.col("sse_units").cast("double") / F.col("n"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.sqrt(F.col("sse_units").cast("double") / F.col("n")))
         .alias("rmse_micro"),
-        F.floor(F.expr(_REG_R2) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("r2_micro"),
+        micro(F.expr(_REG_R2)).alias("r2_micro"),
     )
 
 
@@ -786,9 +764,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("resolution_micro"),
-            F.floor(F.expr(_BR_UNC) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("uncertainty_micro"),
+            micro(F.expr(_BR_UNC)).alias("uncertainty_micro"),
         )
     )
 
@@ -912,14 +888,10 @@ def eval_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pos",
             "n_neg",
             F.col("mg").alias("max_scaled_gap"),
-            F.floor(
+            micro(
                 F.col("mg").cast("double")
                 / (F.col("n_pos").cast("double") * F.col("n_neg").cast("double"))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("ks_micro"),
+            ).alias("ks_micro"),
             F.col("v_at_max").alias("threshold_micro"),
         )
     )
@@ -1008,16 +980,8 @@ def eval_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         "only1",
         "only2",
         "neither",
-        F.floor(
-            (d * d).cast("double") / s * F.lit(1000000.0) + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("chi2_micro"),
-        F.floor(
-            (dc * dc).cast("double") / s * F.lit(1000000.0) + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("chi2_cc_micro"),
+        micro((d * d).cast("double") / s).alias("chi2_micro"),
+        micro((dc * dc).cast("double") / s).alias("chi2_cc_micro"),
     )
 
 
@@ -1145,23 +1109,15 @@ def eval_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("d") == _RBO_DEPTH, F.col("ov")))
         .cast("bigint")
         .alias("overlap_at_k"),
-        F.floor(
+        micro(
             F.max(F.when(F.col("d") == _RBO_DEPTH, F.col("ov")))
             .cast("double")
             / F.lit(float(_RBO_DEPTH))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("jaccard_at_k_micro"),
-        F.floor(
+        ).alias("jaccard_at_k_micro"),
+        micro(
             F.lit(1.0 - _RBO_P)
             * (F.sum("t_pico").cast("double") / F.lit(1e12))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("rbo_micro"),
+        ).alias("rbo_micro"),
     )
 
 
@@ -1402,14 +1358,10 @@ def eval_gauc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_pairs"),
         F.sum("num2").cast("bigint").alias("sum_num2"),
-        F.floor(
+        micro(
             F.sum("num2").cast("double")
             / (F.lit(2.0) * F.sum(F.col("n_pos") * F.col("n_neg")))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("gauc_micro"),
+        ).alias("gauc_micro"),
     )
 
 
@@ -1529,16 +1481,12 @@ def eval_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     iv = j.join(k, F.col("j.bin") <= F.col("k.bin")).select(
         F.col("j.bin").alias("jb"),
         F.col("k.bin").alias("kb"),
-        F.floor(
+        micro(
             (
                 F.col("k.cpos") - (F.col("j.cpos") - F.col("j.n_pos"))
             ).cast("double")
             / (F.col("k.cn") - (F.col("j.cn") - F.col("j.n")))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("rate_micro"),
+        ).alias("rate_micro"),
     )
     inner_min = (
         cum.select("bin")
@@ -1651,10 +1599,7 @@ def eval_fairness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("fp"),
     )
-    sel = F.floor(
-        F.col("n_pred_pos").cast("double") / F.col("n") * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
+    sel = micro(F.col("n_pred_pos").cast("double") / F.col("n"))
     w_all = Window.partitionBy()
     return (
         g.select(
@@ -1664,21 +1609,13 @@ def eval_fairness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             sel.alias("selection_micro"),
             F.when(
                 F.col("n_pos") > 0,
-                F.floor(
-                    F.col("tp").cast("double")
-                    / F.col("n_pos")
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.col("tp").cast("double") / F.col("n_pos")),
             ).alias("tpr_micro"),
             F.when(
                 F.col("n") - F.col("n_pos") > 0,
-                F.floor(
-                    F.col("fp").cast("double")
-                    / (F.col("n") - F.col("n_pos"))
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(
+                    F.col("fp").cast("double") / (F.col("n") - F.col("n_pos"))
+                ),
             ).alias("fpr_micro"),
         )
         .select(

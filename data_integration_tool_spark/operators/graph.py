@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import micro
 from ..io import load
 from ..registry import query
 
@@ -683,15 +684,16 @@ _KCORE_ROUNDS = 5
 _KCORE_BCAST_EDGE_BYTES = 64 << 20
 
 
-def _latest_ckpt_bytes(spark: SparkSession) -> int:
-    """mem+disk bytes of the newest persisted RDD — right after an
-    eager localCheckpoint that is the checkpoint just materialized
-    (RDD ids are monotonic). Metadata read only; no job."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    if not infos:
-        return 0
-    newest = max(infos, key=lambda i: i.id())
-    return int(newest.memSize() + newest.diskSize())
+def _ckpt_bytes(df: DataFrame) -> int:
+    """mem+disk bytes of ``df``'s own materialized checkpoint: the RDD
+    behind its ``LogicalRDD``, looked up by id, so an unrelated persist
+    made after the checkpoint cannot change the answer. 0 while the
+    checkpoint is not materialized. Metadata read only; no job."""
+    rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return 0
 
 
 def _kcore_oracle() -> str:
@@ -821,7 +823,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e_bytes = _latest_ckpt_bytes(spark)
+    e_bytes = _ckpt_bytes(e)
     prev_e = e
     kept_nodes: DataFrame | None = None  # the oracle's n{r} relation
     prev_kept: DataFrame | None = None
@@ -864,7 +866,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("pa", "pb")
             .localCheckpoint(eager=True)
         )
-        e_bytes = _latest_ckpt_bytes(spark)
+        e_bytes = _ckpt_bytes(e)
 
     # one degree pass per edge set yields the edge-side stats:
     # min degree directly and |E| = Σdeg/2 (handshake identity).
@@ -1036,11 +1038,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sjk",
         F.when(
             F.expr(_ASSORT_DEN) != 0.0,
-            F.floor(
-                F.expr(_ASSORT_NUM) / F.expr(_ASSORT_DEN)
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            micro(F.expr(_ASSORT_NUM) / F.expr(_ASSORT_DEN)),
         ).alias("r_micro"),
     )
 
@@ -1158,13 +1156,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_triangles",
             F.when(
                 F.col("n_wedges") > 0,
-                F.floor(
-                    F.lit(3.0)
-                    * F.col("n_triangles")
-                    / F.col("n_wedges")
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")),
             ).alias("global_cc_micro"),
         )
     )
@@ -1885,13 +1877,11 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e_rich",
         F.when(
             F.col("n_rich") >= 2,
-            F.floor(
+            micro(
                 F.lit(2.0)
                 * F.col("e_rich")
                 / (F.col("n_rich") * (F.col("n_rich") - 1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint"),
+            ),
         ).alias("phi_micro"),
     ).orderBy("k")
 

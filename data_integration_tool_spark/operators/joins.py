@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import micro
+from ..exprs import cents, micro
 from ..io import load
 from ..registry import query
 
@@ -885,9 +885,7 @@ def join_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = o.select(
         F.col("o_custkey").alias("custkey"),
         F.col("o_orderkey").alias("change_id"),
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("attr_cents"),
+        cents(F.col("o_totalprice")).alias("attr_cents"),
         F.col("o_orderdate").alias("valid_from"),
     )
     e = load(spark, sf_dir, "events")
@@ -1098,8 +1096,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
     import tempfile
-
-    from ..exprs import cents
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -1338,8 +1334,6 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan and read the flags; re-emission via createDataFrame keeps
     one execution per call. Money quantized to cents per line before
     the sum (quantize-then-sum)."""
-    from ..exprs import cents
-
     f = load(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_orderkey") % 10 < 8, F.lit(1))
         .otherwise(F.col("l_orderkey"))

@@ -5,13 +5,13 @@ The pairwise operators (``dedup_ngram_jaccard``, ``dedup_embedding``,
 group. A skewed block — one giant ``source`` at 100 TB — would hand a
 single executor an n² matrix it cannot hold. This module bounds that:
 every block is tiled into chunk pairs ``(ca, cb)`` with ``ca <= cb`` so
-no kernel invocation ever sees more than ``2 × max_block_rows`` rows,
+no kernel invocation ever sees more than ``2 × MAX_PAIR_BLOCK_ROWS`` rows,
 regardless of block skew.
 
 Mechanics:
 - block sizes come from one tiny partial-agg'd count, broadcast back;
 - each row gets a deterministic chunk id ``pmod(xxhash64(id), n_chunks)``
-  where ``n_chunks = ceil(block_size / max_block_rows)``;
+  where ``n_chunks = ceil(block_size / MAX_PAIR_BLOCK_ROWS)``;
 - a row with chunk ``c`` replicates into the ``n_chunks`` tiles
   ``(min(o,c), max(o,c))`` for ``o in 0..n_chunks-1`` — the standard
   triangular tiling, each unordered chunk pair exactly once;
@@ -31,31 +31,24 @@ compare count just lands in ``n_chunks·(n_chunks+1)/2`` bounded tasks).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Per-kernel-invocation row bound. A (2·4096)²·8B cosine matrix is
 # ~0.5 GB — comfortable in a 4 GB executor alongside the Arrow batch.
-MAX_PAIR_BLOCK_ROWS = int(os.environ.get("SPARK_GRAFT_MAX_PAIR_BLOCK", "4096"))
+MAX_PAIR_BLOCK_ROWS = 4096
 
-TILE_COLS = ("_ca", "_cb")  # tile id, appended to the groupBy key
 CHUNK_COL = "_ck"  # per-row chunk id, read by kernels for pair ownership
 
 
 def tile_pair_blocks(
-    df: DataFrame,
-    block_cols: list[str],
-    id_col: str,
-    max_block_rows: int | None = None,
+    df: DataFrame, block_cols: list[str], id_col: str
 ) -> DataFrame:
     """Return ``df`` with ``_ck`` (chunk id) and exploded ``_ca``/``_cb``
     tile columns; callers group by ``(*block_cols, _ca, _cb)``."""
-    max_rows = max_block_rows or MAX_PAIR_BLOCK_ROWS
     sizes = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("_bn"))
     t = df.join(F.broadcast(sizes), list(block_cols)).withColumn(
-        "_nc", F.ceil(F.col("_bn") / F.lit(max_rows)).cast("int")
+        "_nc", F.ceil(F.col("_bn") / F.lit(MAX_PAIR_BLOCK_ROWS)).cast("int")
     )
     t = t.withColumn(
         CHUNK_COL, F.pmod(F.xxhash64(F.col(id_col)), F.col("_nc")).cast("int")

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import MICRO_SQL, micro
+from ..exprs import MICRO_SQL, cents, micro
 from ..io import load
 from ..registry import query
 
@@ -953,9 +953,7 @@ def dq_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     tagged = o.select(
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents(F.col("o_totalprice")).alias("v"),
         (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
         .cast("bigint")
         .alias("in_a"),
@@ -984,14 +982,10 @@ def dq_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_a",
             "n_b",
             "max_scaled_gap",
-            F.floor(
+            micro(
                 F.col("max_scaled_gap").cast("double")
                 / (F.col("n_a").cast("double") * F.col("n_b").cast("double"))
-                * 1000000.0
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("ks_micro"),
+            ).alias("ks_micro"),
         )
     )
 
@@ -1078,14 +1072,10 @@ def dq_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_left_mult",
         "max_right_mult",
         "n_matched_keys",
-        F.floor(
+        micro(
             F.col("result_rows").cast("double")
             / F.col("left_rows").cast("double")
-            * 1000000.0
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("fanout_micro"),
+        ).alias("fanout_micro"),
     )
 
 
@@ -1279,8 +1269,6 @@ def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.1 s → ~1.4 s under bench conditions, and unlike the buffering
     plan every stage stays parallel when groups multiply). The fences then broadcast
     back onto one combinable fence-count pass."""
-    from ..exprs import cents
-
     vals = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         cents(F.col("l_extendedprice")).alias("vc"),
@@ -1963,14 +1951,8 @@ def dq_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("b"), 1)).cast("bigint").alias("n_b"),
         )
         out = g if out is None else out.unionAll(g)
-    da = F.floor(
-        F.col("ndv_a").cast("double") / F.col("n_a") * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
-    db = F.floor(
-        F.col("ndv_b").cast("double") / F.col("n_b") * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
+    da = micro(F.col("ndv_a").cast("double") / F.col("n_a"))
+    db = micro(F.col("ndv_b").cast("double") / F.col("n_b"))
     return out.select(
         "col",
         "ndv_a",
@@ -2122,14 +2104,10 @@ def dq_arrival_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("sla_sec").cast("bigint").alias("sla_sec"),
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.count(F.when(ok, F.lit(1))).cast("bigint").alias("n_within"),
-            F.floor(
+            micro(
                 F.count(F.when(ok, F.lit(1))).cast("double")
                 / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("within_micro"),
+            ).alias("within_micro"),
             F.max("delay_sec").cast("bigint").alias("max_delay_sec"),
             F.when(
                 F.lit(20) * F.count(F.when(ok, F.lit(1)))

@@ -1482,7 +1482,7 @@ def emb_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.floor(adc * 1000000.0 + F.lit(0.5)).cast("bigint").alias("adc_micro"),
+            micro(adc).alias("adc_micro"),
         )
         .orderBy(adc.asc(), F.col("vec_id").asc())
         .limit(PQ_TOPK)
@@ -1535,11 +1535,9 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.groupBy("dim_pos")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.floor(F.min("v") * 1000000.0 + F.lit(0.5)).cast("bigint").alias("min_micro"),
-            F.floor(F.max("v") * 1000000.0 + F.lit(0.5)).cast("bigint").alias("max_micro"),
-            F.sum(F.floor(F.col("v") * 1000000.0 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_micro"),
+            micro(F.min("v")).alias("min_micro"),
+            micro(F.max("v")).alias("max_micro"),
+            F.sum(micro(F.col("v"))).cast("bigint").alias("sum_micro"),
             F.sum((F.col("v") == 0.0).cast("bigint")).alias("n_zero"),
         )
         .orderBy("dim_pos")
@@ -1690,7 +1688,7 @@ def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization floor(x·1e6+0.5) and squared-distance sums are the
     same int64 arithmetic as the oracle's CTEs, and integer sums are
     order-independent, so the trajectory stays bit-identical
-    (exact_check). The FINAL assignment stays an expression plan
+    (tools/check.py). The FINAL assignment stays an expression plan
     (array HOF) so downstream composition keeps a declarative
     lineage. (A flat-column q0..q63 form was tried first: 64-wide
     codegen recompiled per round and planning blew up 6× — kernels
@@ -1716,11 +1714,7 @@ def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     k = _KM_K
 
@@ -1896,11 +1890,7 @@ def eval_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_neg",
         num.cast("bigint").alias("auc_num"),
         den.cast("bigint").alias("auc_den"),
-        F.floor(
-            num.cast("double") / den * F.lit(1000000.0) + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("auc_micro"),
+        micro(num.cast("double") / den).alias("auc_micro"),
     )
 
 
@@ -1970,30 +1960,14 @@ def eval_confusion_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fp",
         "fn",
         "tn",
-        F.floor(
-            F.col("tp").cast("double")
-            / (F.col("tp") + F.col("fp"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("tp").cast("double") / (F.col("tp") + F.col("fp")))
         .alias("precision_micro"),
-        F.floor(
-            F.col("tp").cast("double")
-            / (F.col("tp") + F.col("fn"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("tp").cast("double") / (F.col("tp") + F.col("fn")))
         .alias("recall_micro"),
-        F.floor(
+        micro(
             (2 * F.col("tp")).cast("double")
             / (2 * F.col("tp") + F.col("fp") + F.col("fn"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("f1_micro"),
+        ).alias("f1_micro"),
     )
 
 
@@ -2107,13 +2081,7 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = ab.select(
         "label",
-        F.floor(
-            (F.col("b") - F.col("a"))
-            / F.greatest(F.col("a"), F.col("b"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro((F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b")))
         .alias("s_micro"),
     )
     return (
@@ -2309,11 +2277,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-width exchange."""
     e = load(spark, sf_dir, "embeddings").select(
         "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     projs = e.select(
         "label",
@@ -2491,11 +2455,7 @@ def eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     cents = e.filter(F.col("vec_id") < 10).orderBy("vec_id").collect()  # driver-scalar: 10x64 centroid components
 
@@ -2569,25 +2529,17 @@ def eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_labels",
         "n_clusters",
-        F.floor(
-            F.col("pure_n").cast("double") / F.col("n") * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("pure_n").cast("double") / F.col("n"))
         .alias("purity_micro"),
         F.floor(
             F.col("mi_pico").cast("double") / F.lit(1000000.0) + F.lit(0.5)
         )
         .cast("bigint")
         .alias("mi_micro"),
-        F.floor(
+        micro(
             F.col("mi_pico").cast("double")
             / F.sqrt(F.col("hl_pico").cast("double") * F.col("hc_pico"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("nmi_micro"),
+        ).alias("nmi_micro"),
     )
 
 
@@ -2777,14 +2729,10 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_hits"), F.lit(0))
             .cast("bigint")
             .alias("n_hits"),
-            F.floor(
+            micro(
                 F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
                 / F.lit(10.0)
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("recall_micro"),
+            ).alias("recall_micro"),
         )
         .orderBy("query_id")
     )
@@ -2929,12 +2877,7 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cent_id",
         "n_base",
         "n_delta",
-        F.floor(
-            F.col("n_delta").cast("double") / F.col("n_base")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("n_delta").cast("double") / F.col("n_base"))
         .alias("growth_micro"),
         F.floor(
             F.col("s_base").cast("double") / F.col("n_base") + F.lit(0.5)
@@ -3186,14 +3129,10 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_vectors",
         "n_excluded",
         "sum_lnratio_pico",
-        F.floor(
+        micro(
             F.col("n_vectors").cast("double")
             / (F.col("sum_lnratio_pico").cast("double") / F.lit(1e12))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("intrinsic_dim_micro"),
+        ).alias("intrinsic_dim_micro"),
     )
 
 
@@ -3320,11 +3259,7 @@ def eval_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("rel") == 1,
-                F.floor(
-                    F.col("hits_at").cast("double") / F.col("rn")
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.col("hits_at").cast("double") / F.col("rn")),
             ).otherwise(F.lit(0))
         )
         .cast("bigint")
@@ -3431,11 +3366,7 @@ def eval_topk_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     q = e.select(
         "vec_id", "label", F.posexplode("qv").alias("dim_pos", "v")
@@ -3483,19 +3414,9 @@ def eval_topk_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("hit1").cast("bigint").alias("n_top1"),
             F.sum("hit3").cast("bigint").alias("n_top3"),
-            F.floor(
-                F.sum("hit1").cast("double") / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum("hit1").cast("double") / F.count(F.lit(1)))
             .alias("top1_micro"),
-            F.floor(
-                F.sum("hit3").cast("double") / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum("hit3").cast("double") / F.count(F.lit(1)))
             .alias("top3_micro"),
         )
         .orderBy("label")
@@ -3569,11 +3490,7 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         (F.col("vec_id") % 2 == 1).alias("is_new"),
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     q = e.select(
         "vec_id", "label", "is_new", F.posexplode("qv").alias("dim_pos", "v")
@@ -4114,14 +4031,10 @@ def emb_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.select(
         "query_id",
         "n_overlap",
-        F.floor(
+        micro(
             F.col("n_overlap").cast("double")
             / (F.lit(20) - F.col("n_overlap"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("jaccard_micro"),
+        ).alias("jaccard_micro"),
         "n_rel_full",
         "n_rel_prefix",
     ).orderBy("query_id")
@@ -4478,13 +4391,7 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("nprobe").cast("bigint").alias("nprobe"),
             "n_hits",
-            F.floor(
-                F.col("n_hits").cast("double")
-                / F.lit(200.0)
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("n_hits").cast("double") / F.lit(200.0))
             .alias("mean_recall_micro"),
         )
         .orderBy("nprobe")
@@ -4620,28 +4527,15 @@ def eval_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("k").cast("bigint").alias("k"),
             "hits",
             nrel.alias("n_rel_total"),
-            F.floor(
-                F.col("hits").cast("double") / F.col("k")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("hits").cast("double") / F.col("k"))
             .alias("precision_micro"),
             F.when(
                 nrel > 0,
-                F.floor(
-                    F.col("hits").cast("double") / nrel
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.col("hits").cast("double") / nrel),
             ).alias("recall_micro"),
             F.when(
                 nrel > 0,
-                F.floor(
-                    F.lit(2.0) * F.col("hits") / (F.col("k") + nrel)
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(F.lit(2.0) * F.col("hits") / (F.col("k") + nrel)),
             ).alias("f1_micro"),
         )
         .orderBy("query_id", "k")
@@ -4798,9 +4692,7 @@ def eval_delong_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_p2sq",
             "sum_q2",
             "sum_q2sq",
-            F.floor(auc_d * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("auc_micro"),
+            micro(auc_d).alias("auc_micro"),
             F.floor(v10 * F.lit(1000000000.0) + F.lit(0.5))
             .cast("bigint")
             .alias("v10_nano"),
@@ -4893,11 +4785,7 @@ def emb_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000.0 + F.lit(0.5))
-            .cast("bigint"),
-        ).alias("qv"),
+        F.transform("embedding", micro).alias("qv"),
     )
     q = e.select(
         "vec_id", "label", F.posexplode("qv").alias("dim_pos", "v")
@@ -4943,13 +4831,7 @@ def emb_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("mean_margin_unit"),
             F.sum(viol).cast("bigint").alias("n_violations"),
-            F.floor(
-                F.sum(viol).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum(viol).cast("double") / F.count(F.lit(1)))
             .alias("violation_rate_micro"),
         )
         .orderBy("label")

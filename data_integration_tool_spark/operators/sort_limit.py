@@ -809,15 +809,8 @@ def sample_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fold",
             "lang",
             "n_docs",
-            F.floor(share * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("share_micro"),
-            F.floor(
-                (share - F.lit(1.0) / F.lit(KFOLD_K)) * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("dev_micro"),
+            micro(share).alias("share_micro"),
+            micro(share - F.lit(1.0) / F.lit(KFOLD_K)).alias("dev_micro"),
         )
         .orderBy("fold", "lang")
     )
@@ -955,12 +948,6 @@ def sample_time_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_users_leaked"),
         leaked_ev.cast("bigint").alias("n_test_events_leaked"),
-        F.floor(
-            leaked_ev.cast("double")
-            / F.sum("n_test_ev")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(leaked_ev.cast("double") / F.sum("n_test_ev"))
         .alias("leak_frac_micro"),
     )

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..exprs import cents
 from ..io import load
 from ..registry import query
 
@@ -191,9 +192,7 @@ def subq_quantified_all(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_nationkey",
             "s_suppkey",
             "s_name",
-            F.floor(F.col("s_acctbal") * 100.0 + F.lit(0.5))
-            .cast("bigint")
-            .alias("acctbal_cents"),
+            cents(F.col("s_acctbal")).alias("acctbal_cents"),
         )
         .orderBy("s_nationkey", "s_suppkey")
     )

@@ -333,12 +333,10 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "token",
-            F.floor(
+            micro(
                 F.col("tf")
                 * F.log(F.col("n_docs").cast("double") / F.col("df"))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("bigint").alias("tfidf_micro"),
+            ).alias("tfidf_micro"),
         )
     )
     w = Window.partitionBy("doc_id").orderBy(
@@ -406,12 +404,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         freqs.join(tot, "doc_id")
         .groupBy("doc_id")
         .agg(
-            F.floor(
-                (F.lit(0.0) - F.sum(p * F.log(p) / F.log(F.lit(2.0))))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.lit(0.0) - F.sum(p * F.log(p) / F.log(F.lit(2.0))))
             .alias("char_entropy_microbits")
         )
     )
@@ -525,9 +518,7 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tok_a",
             "tok_b",
             "n_ab",
-            F.floor(pmi * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("pmi_micro"),
+            micro(pmi).alias("pmi_micro"),
         )
     )
 
@@ -687,9 +678,7 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("first_doc") == F.col("doc_id")).cast("bigint")).alias(
                 "n_novel"
             ),
-            F.floor(F.sum(novel) / F.count(F.lit(1)) * 1000000.0 + F.lit(0.5))
-            .cast("bigint")
-            .alias("novelty_micro"),
+            micro(F.sum(novel) / F.count(F.lit(1))).alias("novelty_micro"),
         )
         .orderBy("doc_id")
     )
@@ -1073,12 +1062,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sy",
         "sxy",
         "sxx",
-        F.floor(F.expr(_ZIPF_SLOPE) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("slope_micro"),
-        F.floor(F.expr(_ZIPF_ICEPT) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("intercept_micro"),
+        micro(F.expr(_ZIPF_SLOPE)).alias("slope_micro"),
+        micro(F.expr(_ZIPF_ICEPT)).alias("intercept_micro"),
     )
 
 
@@ -1356,12 +1341,8 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "w",
         "syl",
-        F.floor(F.expr(_READ_FRE) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("fre_micro"),
-        F.floor(F.expr(_READ_ARI) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("ari_micro"),
+        micro(F.expr(_READ_FRE)).alias("fre_micro"),
+        micro(F.expr(_READ_ARI)).alias("ari_micro"),
     )
     return (
         scored.groupBy("source")
@@ -1516,20 +1497,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "vocab",
             "hapax",
-            F.floor(
-                F.col("hapax").cast("double")
-                / F.col("vocab")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("hapax").cast("double") / F.col("vocab"))
             .alias("hapax_ratio_micro"),
-            F.floor(F.expr(_HP_SLOPE) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("heaps_beta_micro"),
-            F.floor(F.expr(_HP_INTERCEPT) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("heaps_lnk_micro"),
+            micro(F.expr(_HP_SLOPE)).alias("heaps_beta_micro"),
+            micro(F.expr(_HP_INTERCEPT)).alias("heaps_lnk_micro"),
         )
         .orderBy("source")
     )
@@ -1804,12 +1775,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.col("k"), F.col("vsize")).alias("vocab_used"),
         covered.alias("covered_tokens"),
         F.col("total").alias("total_tokens"),
-        F.floor(
-            covered.cast("double") / F.col("total") * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("coverage_micro"),
+        micro(covered.cast("double") / F.col("total")).alias("coverage_micro"),
     ).orderBy("k")
 
 
@@ -1955,22 +1921,15 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_s").alias("n_tokens"),
             "n_shared_vocab",
             "sum_term_pico",
-            F.floor(
-                (
-                    F.col("sum_term_pico").cast("double")
-                    / F.lit(1000000000000.0)
-                    + F.lit(0.5)
-                    * (
-                        F.lit(1.0)
-                        - F.col("covered_c").cast("double") / F.col("n")
-                    )
-                    * F.log(F.lit(2.0))
-                )
-                * F.lit(1000000.0)
+            micro(
+                F.col("sum_term_pico").cast("double")
+                / F.lit(1000000000000.0)
                 + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("js_micro"),
+                * (
+                    F.lit(1.0) - F.col("covered_c").cast("double") / F.col("n")
+                )
+                * F.log(F.lit(2.0))
+            ).alias("js_micro"),
         )
         .orderBy("source")
     )
@@ -2176,13 +2135,7 @@ def text_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vocab",
             "total",
             "covered",
-            F.floor(
-                F.col("covered").cast("double")
-                / F.col("total")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("covered").cast("double") / F.col("total"))
             .alias("coverage_micro"),
         )
         .orderBy("k")
@@ -2306,9 +2259,7 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = stats.select(
         "w1",
         "w2",
-        F.floor(-F.log(p_kn) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("nll_micro"),
+        micro(-F.log(p_kn)).alias("nll_micro"),
     )
     return (
         doc_bg.join(scored, ["w1", "w2"])
@@ -2403,14 +2354,9 @@ def text_sentence_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("n_copies") - 1)
             .cast("bigint")
             .alias("n_dup_instances"),
-            F.floor(
-                F.sum(F.col("n_copies") - 1).cast("double")
-                / F.sum("n_copies")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("dup_rate_micro"),
+            micro(
+                F.sum(F.col("n_copies") - 1).cast("double") / F.sum("n_copies")
+            ).alias("dup_rate_micro"),
             F.max("n_copies").cast("bigint").alias("max_copies"),
         )
         .orderBy("source")

@@ -656,11 +656,7 @@ def win_reset_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.col("grp").cast("bigint").alias("session_no"),
-            F.floor(
-                F.sum("value").over(w_run) * F.lit(1000000.0) + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("running_micro"),
+            micro(F.sum("value").over(w_run)).alias("running_micro"),
         )
         .orderBy("user_id", "event_id")
     )
@@ -829,9 +825,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (F.col("n") >= 2) & (den > 0),
-            F.floor(num / den * F.lit(1000000.0) + F.lit(0.5)).cast(
-                "bigint"
-            ),
+            micro(num / den),
         ).alias("corr_micro"),
     ).orderBy("user_id", "event_id")
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..exprs import micro
 from ..io import load
 from ..registry import query
 
@@ -294,9 +295,7 @@ def plan_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ndv",
         "n_rows",
         "max_rows",
-        F.floor(F.expr(_PA_SKEW) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("skew_ratio_micro"),
+        micro(F.expr(_PA_SKEW)).alias("skew_ratio_micro"),
         F.expr(_PA_VERDICT).alias("verdict"),
     ).orderBy("candidate")
 

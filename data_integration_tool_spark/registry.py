@@ -27,8 +27,9 @@ gate in tests/oracle_check.py):
    etl_incremental_agg / orders_cohort_ltv). Wrap integer sums in
    ``CAST(... AS BIGINT)`` in the oracle.
 3. **Floats that cross a ln()/summation-order boundary ship as
-   micro-unit BIGINTs** (``floor(x*1e6 + 0.5)`` on both engines — the
-   text.py house rule).
+   micro-unit BIGINTs** (``floor(x*1e6 + 0.5)`` on both engines, cents
+   at x100 for money). Builders call ``exprs.micro`` / ``exprs.cents``;
+   ``exprs.MICRO_SQL`` / ``exprs.CENTS_SQL`` spell the same rule in SQL.
 4. **Builders run SERIALLY, one at a time per session.** A handful of
    builders scope a session conf around their work and restore it in
    ``finally`` (sources/pysource.py drops shuffle partitions for the

@@ -105,7 +105,7 @@ def convert(
 
 # Registered CDC-apply query (imports deferred so this module stays
 # importable without the registry side effects when used as a library).
-from ..exprs import cents  # noqa: E402
+from ..exprs import cents, micro  # noqa: E402
 from ..io import load  # noqa: E402
 from ..registry import query  # noqa: E402
 
@@ -442,14 +442,14 @@ def etl_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning."""
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit("1997-01-01").cast("timestamp")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    price_cents = cents(F.col("o_totalprice"))
 
     def monthly(df: DataFrame) -> DataFrame:
         return df.groupBy(
             F.date_trunc("month", "o_orderdate").alias("mo")
         ).agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(cents).alias("revenue_cents"),
+            F.sum(price_cents).alias("revenue_cents"),
         )
 
     base = monthly(o.filter(F.col("o_orderdate") < cutoff))
@@ -1096,9 +1096,7 @@ def etl_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no float equality.
     """
     o = load(spark, sf_dir, "orders")
-    cents_val = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast(
-        "bigint"
-    )
+    cents_val = cents(F.col("o_totalprice"))
     v1 = o.filter(F.col("o_orderkey") % 7 != 0).select(
         F.col("o_orderkey").alias("k1"), cents_val.alias("val1")
     )
@@ -1556,12 +1554,7 @@ def etl_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.col("o_orderdate").cast("date")).alias(
                 "first_order_date"
             ),
-            F.sum(
-                F.floor(
-                    F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)
-                ).cast("bigint")
-            )
-            .cast("bigint")
+            F.sum(cents(F.col("o_totalprice"))).cast("bigint")
             .alias("waiting_cents"),
         )
     )
@@ -2039,14 +2032,10 @@ def etl_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_files",
         "n_scanned",
         "rows_scanned",
-        F.floor(
+        micro(
             (F.col("n_files") - F.col("n_scanned")).cast("double")
             / F.col("n_files")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("skip_micro"),
+        ).alias("skip_micro"),
     ).orderBy("probe_id")
 
 
@@ -2357,13 +2346,7 @@ def etl_deletion_vector_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mth",
         "n_rows",
         "n_deleted",
-        F.floor(
-            F.col("n_deleted").cast("double")
-            / F.col("n_rows")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("n_deleted").cast("double") / F.col("n_rows"))
         .alias("deleted_share_micro"),
         F.when(
             F.col("n_deleted") * F.lit(5) > F.col("n_rows"), "rewrite"
@@ -2569,11 +2552,7 @@ def etl_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         if kind == "int":
             return a.cast("string")
         if kind == "double":
-            return (
-                F.floor(a * F.lit(1000000.0) + F.lit(0.5))
-                .cast("bigint")
-                .cast("string")
-            )
+            return micro(a).cast("string")
         if kind == "ts":
             return F.date_format(a, "yyyy-MM-dd HH:mm:ss")
         return a
@@ -2715,20 +2694,10 @@ def etl_stats_merge_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ndv_lower",
         "ndv_upper",
         "ndv_exact",
-        F.floor(
+        micro(
             (F.col("ndv_upper") - F.col("ndv_lower")).cast("double")
             / F.col("ndv_exact")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("bound_width_micro"),
-        F.floor(
-            F.col("ndv_upper").cast("double")
-            / F.col("ndv_exact")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        ).alias("bound_width_micro"),
+        micro(F.col("ndv_upper").cast("double") / F.col("ndv_exact"))
         .alias("upper_overcount_micro"),
     )

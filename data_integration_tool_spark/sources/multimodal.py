@@ -24,19 +24,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..exprs import micro
 from ..io import load
 from ..registry import query
 
 FEATURE_DIM = 8
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("payload_len", T.LongType()),
-    ]
-)
 
 
 def attach_fake_payload(df: DataFrame) -> DataFrame:
@@ -421,14 +413,10 @@ def multimodal_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shard_bytes",
             "first_doc",
             "last_doc",
-            F.floor(
+            micro(
                 F.col("shard_bytes").cast("double")
                 / F.lit(SHARD_CAPACITY_BYTES)
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("fill_micro"),
+            ).alias("fill_micro"),
         )
         .orderBy("source", "shard_idx")
     )

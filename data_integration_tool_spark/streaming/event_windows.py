@@ -1082,9 +1082,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moments.select(
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").alias("n_pairs"),
-        F.floor(F.expr(_ACF_EXPR) * 1000000.0 + F.lit(0.5))
-        .cast("bigint")
-        .alias("acf_micro"),
+        micro(F.expr(_ACF_EXPR)).alias("acf_micro"),
     ).orderBy("lag")
 
 
@@ -1164,9 +1162,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rev").over(w).cast("bigint").alias("s7"),
         F.count(F.lit(1)).over(w).alias("n7"),
     )
-    trend_micro = (
-        F.floor(F.col("s7") / 7.0 * 1000000.0 + F.lit(0.5)).cast("bigint")
-    )
+    trend_micro = micro(F.col("s7") / 7.0)
     detrended = trended.filter(F.col("n7") == 7).select(
         "day",
         "dow",
@@ -1551,9 +1547,7 @@ def ts_changepoint_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("right_mean_micro"),
-        F.floor(F.expr(_CP_GAIN) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("gain_micro"),
+        micro(F.expr(_CP_GAIN)).alias("gain_micro"),
     )
     return cand.orderBy(
         F.col("gain_micro").desc(), F.col("split_day")
@@ -1776,14 +1770,10 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = daily.alias("a")
     b = daily.alias("b")
     slopes = a.join(b, F.col("a.d") < F.col("b.d")).select(
-        F.floor(
+        micro(
             (F.col("b.y") - F.col("a.y")).cast("double")
             / (F.col("b.d") - F.col("a.d"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("sm")
+        ).alias("sm")
     )
 
     def int_median(df: DataFrame, col: str, out: str) -> DataFrame:
@@ -2131,13 +2121,9 @@ def seq_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("dead") == 1, F.lit(0).cast("bigint"))
             .when(
                 F.col("cl").isNotNull(),
-                F.floor(
-                    F.exp(
-                        F.col("cl").cast("double") / F.lit(1000000000000.0)
-                    )
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                micro(
+                    F.exp(F.col("cl").cast("double") / F.lit(1000000000000.0))
+                ),
             )
             .alias("survival_micro"),
         )
@@ -2327,12 +2313,7 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col(f"r{k}_pico")
                             .cast("bigint")
                             .alias("rho_pico"),
-                            F.floor(
-                                F.col(f"p{k}_{k}") * F.lit(1000000.0)
-                                + F.lit(0.5)
-                            )
-                            .cast("bigint")
-                            .alias("pacf_micro"),
+                            micro(F.col(f"p{k}_{k}")).alias("pacf_micro"),
                         )
                         for k in range(1, _PACF_L + 1)
                     ]
@@ -2561,16 +2542,9 @@ def ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seg",
             "seg_start",
             F.col("scnt").alias("n_days"),
-            F.floor(
-                F.col("ssum").cast("double") / F.col("scnt")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.col("ssum").cast("double") / F.col("scnt"))
             .alias("paa_micro"),
-            F.floor(F.expr(_SAX_Z) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("z_micro"),
+            micro(F.expr(_SAX_Z)).alias("z_micro"),
             F.expr(_SAX_SYMBOL).alias("symbol"),
         )
         .orderBy("event_type", "seg")
@@ -2754,9 +2728,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").alias("n_days"),
-        F.floor(F.expr(_CCF_R) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("r_micro"),
+        micro(F.expr(_CCF_R)).alias("r_micro"),
     ).orderBy("lag")
 
 
@@ -2899,9 +2871,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = moments.crossJoin(F.broadcast(tot)).select(
         F.col("lag").cast("bigint").alias("lag"),
         "n",
-        F.floor(F.expr(_LB_RHO) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("rho_micro"),
+        micro(F.expr(_LB_RHO)).alias("rho_micro"),
         F.floor(F.expr(_LB_TERM) * F.lit(1000000000000.0) + F.lit(0.5))
         .cast("bigint")
         .alias("t_pico"),
@@ -3116,15 +3086,8 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m").cast("bigint").alias("m"),
             F.col("nb").alias("n_blocks"),
             "var_unit",
-            F.floor(F.expr(_HU_SLOPE) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("slope_micro"),
-            F.floor(
-                (F.lit(1.0) + F.expr(_HU_SLOPE) / F.lit(2.0))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.expr(_HU_SLOPE)).alias("slope_micro"),
+            micro(F.lit(1.0) + F.expr(_HU_SLOPE) / F.lit(2.0))
             .alias("hurst_micro"),
         )
         .orderBy("m")
@@ -3376,10 +3339,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "rev",
         (
-            F.col("rev") * F.lit(1000000)
-            - F.floor(
-                F.col("s7") / F.lit(7.0) * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("bigint")
+            F.col("rev") * F.lit(1000000) - micro(F.col("s7") / F.lit(7.0))
         ).alias("det_micro"),
     ).localCheckpoint(eager=False)
     seasonal = detrended.groupBy("dow").agg(
@@ -3432,12 +3392,8 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.expr(_SS_VT) / F.lit(1000000.0) + F.lit(0.5))
         .cast("bigint")
         .alias("var_trendres_unit"),
-        F.floor(F.expr(_SS_FS) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("seasonal_strength_micro"),
-        F.floor(F.expr(_SS_FT) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("trend_strength_micro"),
+        micro(F.expr(_SS_FS)).alias("seasonal_strength_micro"),
+        micro(F.expr(_SS_FT)).alias("trend_strength_micro"),
     )
 
 
@@ -3546,10 +3502,7 @@ def ts_anomaly_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "rev",
         (
-            F.col("rev") * F.lit(1000000)
-            - F.floor(
-                F.col("s7") / F.lit(7.0) * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("bigint")
+            F.col("rev") * F.lit(1000000) - micro(F.col("s7") / F.lit(7.0))
         ).alias("det_micro"),
     ).localCheckpoint(eager=False)
     seasonal = detrended.groupBy("dow").agg(
@@ -3671,15 +3624,9 @@ def agg_fano_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("nd").alias("n_days"),
         F.col("s").alias("n_events"),
-        F.floor(F.expr(_FANO_MEAN) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("mean_micro"),
-        F.floor(F.expr(_FANO_VAR) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("var_micro"),
-        F.floor(F.expr(_FANO) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("fano_micro"),
+        micro(F.expr(_FANO_MEAN)).alias("mean_micro"),
+        micro(F.expr(_FANO_VAR)).alias("var_micro"),
+        micro(F.expr(_FANO)).alias("fano_micro"),
         (F.expr(_FANO) > F.lit(1.5)).alias("bursty"),
     ).orderBy("event_type")
 
@@ -3975,7 +3922,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("var18").cast("bigint").alias("var18"),
         F.when(
             F.col("var18") > 0,
-            F.floor(z * F.lit(1000000.0) + F.lit(0.5)).cast("bigint"),
+            micro(z),
         ).alias("z_micro"),
         F.when(F.col("var18") <= 0, "degenerate")
         .when(z > 1.959964, "increasing")
@@ -4111,12 +4058,7 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w_sec",
         "n_events",
         "n_dropped",
-        F.floor(
-            F.col("n_dropped").cast("double") / F.col("n_events")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("n_dropped").cast("double") / F.col("n_events"))
         .alias("drop_micro"),
     ).orderBy("event_type", "w_sec")
 
@@ -4283,15 +4225,11 @@ def events_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_days",
             "sum_dau",
             "mau",
-            F.floor(
+            micro(
                 F.col("sum_dau").cast("double")
                 / F.col("n_days")
                 / F.col("mau")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("stickiness_micro"),
+            ).alias("stickiness_micro"),
         )
         .orderBy("mth")
     )
@@ -4392,17 +4330,13 @@ def seq_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_steps"),
             F.sum("nll_pico").cast("bigint").alias("nll_pico"),
-            F.floor(
+            micro(
                 F.exp(
                     F.sum("nll_pico").cast("double")
                     / F.lit(1000000000000.0)
                     / F.count(F.lit(1))
                 )
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("perplexity_micro"),
+            ).alias("perplexity_micro"),
         )
         .orderBy("user_id")
     )
@@ -4495,20 +4429,12 @@ def ts_circadian_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "hr",
         "cnt",
-        F.floor(
+        micro(
             F.col("cnt") * F.element_at(cos_arr, (F.col("hr") + 1).cast("int"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("tc"),
-        F.floor(
+        ).alias("tc"),
+        micro(
             F.col("cnt") * F.element_at(sin_arr, (F.col("hr") + 1).cast("int"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("ts_"),
+        ).alias("ts_"),
     )
     peak = F.max(
         F.struct(F.col("cnt").alias("c"), (-F.col("hr")).alias("nh"))
@@ -4531,13 +4457,7 @@ def ts_circadian_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "peak_cnt",
         "sc_micro",
         "ss_micro",
-        F.floor(
-            F.sqrt(sc_d * sc_d + ss_d * ss_d)
-            / F.col("n_events")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.sqrt(sc_d * sc_d + ss_d * ss_d) / F.col("n_events"))
         .alias("resultant_micro"),
     ).orderBy("event_type")
 
@@ -4690,27 +4610,18 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit(0).cast("bigint"))
         .alias("term"),
-        F.floor(
-            F.col("pw").cast("double") / F.sum("pw").over(w_tot)
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        micro(F.col("pw").cast("double") / F.sum("pw").over(w_tot))
         .alias("share_micro"),
     )
     return terms.agg(
         F.lit(len(_PGRAM_PERIODS)).cast("bigint").alias("n_periods"),
         F.min("total").cast("bigint").alias("total_power_unit"),
         F.sum("term").cast("bigint").alias("entropy_nano"),
-        F.floor(
+        micro(
             F.sum("term").cast("double")
             / F.lit(1000000000.0)
             / F.lit(float(_SPECENT_LN_K))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("entropy_norm_micro"),
+        ).alias("entropy_norm_micro"),
         F.max("share_micro").cast("bigint").alias("peak_share_micro"),
     )
 
@@ -5038,9 +4949,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = cnts.select(
         "pattern_id",
         "n_windows",
-        F.floor(p * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("share_micro"),
+        micro(p).alias("share_micro"),
         F.floor(-p * F.log(p) * F.lit(1000000000.0) + F.lit(0.5))
         .cast("bigint")
         .alias("term_nano"),
@@ -5051,15 +4960,11 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "share_micro",
         "term_nano",
         F.sum("term_nano").over(w_all).cast("bigint").alias("entropy_nano"),
-        F.floor(
+        micro(
             F.sum("term_nano").over(w_all).cast("double")
             / F.lit(1000000000.0)
             / F.lit(float(_PERMENT_LN6))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("entropy_norm_micro"),
+        ).alias("entropy_norm_micro"),
     ).orderBy("pattern_id")
 
 
@@ -5146,13 +5051,7 @@ def seq_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_new_bigrams"),
-            F.floor(
-                F.sum(novel).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+            micro(F.sum(novel).cast("double") / F.count(F.lit(1)))
             .alias("novelty_micro"),
         )
         .orderBy("day")
@@ -5310,12 +5209,8 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stacked.select(
         "q",
         "n_diffs",
-        F.floor(vr * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("vr_micro"),
-        F.floor((vr - F.lit(1.0)) / z_den * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("z_micro"),
+        micro(vr).alias("vr_micro"),
+        micro((vr - F.lit(1.0)) / z_den).alias("z_micro"),
     ).orderBy("q")
 
 
@@ -5455,15 +5350,11 @@ def ts_forecast_baselines(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("se_snaive"),
         F.when(
             F.col("rn") >= 3,
-            F.floor(
-                F.abs(drift_err) * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("bigint"),
+            micro(F.abs(drift_err)),
         ).alias("ae_drift"),
         F.when(
             F.col("rn") >= 3,
-            F.floor(
-                drift_err * drift_err * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("bigint"),
+            micro(drift_err * drift_err),
         ).alias("se_drift"),
     )
     wide = errs.agg(
@@ -5498,24 +5389,14 @@ def ts_forecast_baselines(spark: SparkSession, sf_dir: str) -> DataFrame:
         "method",
         "n_evals",
         F.floor(mae + F.lit(0.5)).cast("bigint").alias("mae_micro"),
-        F.floor(
+        micro(
             F.sqrt(
                 F.col("sse").cast("double")
                 / F.lit(1000000.0)
                 / F.col("n_evals")
             )
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("rmse_micro"),
-        F.floor(
-            mae
-            / (F.col("saen").cast("double") / F.col("nn"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        ).alias("rmse_micro"),
+        micro(mae / (F.col("saen").cast("double") / F.col("nn")))
         .alias("mase_micro"),
     ).orderBy("method")
 
@@ -5674,12 +5555,10 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_churned"),
             F.when(
                 F.coalesce(F.col("n_churned"), F.lit(0)) > 0,
-                F.floor(
+                micro(
                     (F.col("n_new") + F.col("n_resurrected")).cast("double")
                     / F.col("n_churned")
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                ),
             ).alias("quick_ratio_micro"),
         )
         .orderBy("wk")

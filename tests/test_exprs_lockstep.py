@@ -7,6 +7,9 @@ instead of failing a driver hash three rounds later."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import duckdb
 import pytest
 
@@ -89,3 +92,52 @@ def test_hash_cutoff_lockstep(spark, duck):
     assert got_spark == got_duck
     # every cutoff is exactly 8 hex chars (the truncation bug class)
     assert all(len(c) == 8 for c in got_spark)
+
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "data_integration_tool_spark"
+
+
+def _is_f(node, name):
+    """``node`` is the call ``F.<name>(...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _number(node):
+    """The value of a literal or of ``F.lit(<literal>)``, else None."""
+    if _is_f(node, "lit") and len(node.args) == 1:
+        node = node.args[0]
+    return node.value if isinstance(node, ast.Constant) else None
+
+
+def test_quantize_only_through_helpers():
+    """Builder Column code quantises to micro-units and cents only
+    through ``micro`` and ``cents``, so the rounding rule has one home:
+    no ``F.floor(<x> * <1e6 | 100> + 0.5)`` outside exprs.py."""
+    hits = []
+    for py in sorted(PACKAGE.rglob("*.py")):
+        if py.name == "exprs.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not (_is_f(node, "floor") and len(node.args) == 1):
+                continue
+            arg = node.args[0]
+            if (
+                isinstance(arg, ast.BinOp)
+                and isinstance(arg.op, ast.Add)
+                and _number(arg.right) == 0.5
+                and isinstance(arg.left, ast.BinOp)
+                and isinstance(arg.left.op, ast.Mult)
+                and _number(arg.left.right) in (1e6, 100)
+            ):
+                hits.append(f"{py.relative_to(REPO)}:{node.lineno}")
+    assert not hits, (
+        f"{len(hits)} inline floor(x * scale + 0.5) sites; "
+        "call exprs.micro / exprs.cents instead:\n" + "\n".join(hits)
+    )

@@ -312,6 +312,32 @@ def test_dedup_components_broadcast_is_size_guarded(spark, sf_dir):
         dedup_mod._COMPONENTS_BCAST_MAX_BYTES = real_thresh
 
 
+def test_ckpt_bytes_reads_its_own_checkpoint(spark):
+    """The kcore and components size guards read the bytes of the
+    checkpoint they just made. A larger frame persisted and
+    materialized afterwards must not change the answer, for an eager
+    checkpoint and for a lazy one an action has materialized."""
+    from data_integration_tool_spark.operators.graph import _ckpt_bytes
+
+    eager = spark.range(200).localCheckpoint(eager=True)
+    lazy = spark.range(300).localCheckpoint(eager=False)
+    assert _ckpt_bytes(lazy) == 0
+    lazy.count()
+    want = (_ckpt_bytes(eager), _ckpt_bytes(lazy))
+    assert min(want) > 0
+    big = spark.range(20_000).withColumn("r", F.rand(7)).persist()
+    try:
+        big.count()
+        big_rdd = max(
+            spark.sparkContext._jsc.sc().getRDDStorageInfo(),
+            key=lambda i: i.id(),
+        )
+        assert big_rdd.memSize() + big_rdd.diskSize() > want[1]
+        assert (_ckpt_bytes(eager), _ckpt_bytes(lazy)) == want
+    finally:
+        big.unpersist()
+
+
 def test_udtf_sentence_split_checkpoints_under_the_sort(spark, sf_dir):
     """r13: the final global sort's range-partitioner samples its child
     before sorting it — with the lateral directly underneath, the
