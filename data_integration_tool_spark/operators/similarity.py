@@ -41,6 +41,98 @@ def cosine(a, b) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+# --- exact top-k by cosine -------------------------------------------------
+# Every kNN/IVF builder ranks through these helpers: norms once per row
+# (``normed``), a broadcast probe or centroid slice (``probe_side``),
+# cosine over the precomputed norms (``cos_nrm``, twin of
+# ``_duck_cos_nrm``; ``probe_pairs``), and the house ranking rule
+# (``house_rank`` / ``top_k``; ``nearest_centroid`` for IVF lists).
+# tests/test_exprs_lockstep.py keeps the rule here.
+
+
+def normed(df: DataFrame, *cols) -> DataFrame:
+    """``cols``, ``embedding`` and its L2 norm ``nrm``, computed once per
+    row rather than once per (row × probe) pair."""
+    return df.select(*cols, "embedding", l2_norm("embedding").alias("nrm"))
+
+
+def probe_side(
+    ne: DataFrame,
+    pred: Column,
+    key: str,
+    prefix: str,
+    *carry: str,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The slice of a ``normed`` frame that the corpus is scored against,
+    broadcast unless told otherwise: ``vec_id AS key``, each ``carry``
+    column as ``{prefix}{name}``, then ``{prefix}e`` and ``{prefix}nrm``."""
+    side = ne.filter(pred).select(
+        F.col("vec_id").alias(key),
+        *[F.col(c).alias(prefix + c) for c in carry],
+        F.col("embedding").alias(f"{prefix}e"),
+        F.col("nrm").alias(f"{prefix}nrm"),
+    )
+    return F.broadcast(side) if broadcast else side
+
+
+def cos_nrm(a, b, na: str, nb: str) -> Column:
+    """Cosine of arrays ``a`` and ``b`` over their precomputed norm
+    columns: the op order of ``_duck_cos_nrm``, so bit-equal to it."""
+    return dot(a, b) / (F.col(na) * F.col(nb))
+
+
+def probe_pairs(ne: DataFrame, q: DataFrame, *cols) -> DataFrame:
+    """Every (probe, other corpus row) pair of ``ne`` × ``q`` (a
+    ``probe_side`` keyed ``query_id``, prefix ``q``): ``query_id``,
+    ``cols`` and their ``cosine``. A probe never scores itself."""
+    cos = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
+    return (
+        ne.crossJoin(q)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", *cols, cos)
+    )
+
+
+def house_rank(part, score: str, tie: str) -> Column:
+    """The house ranking rule: ``row_number`` within ``part`` (a column
+    name, a list, or ``[]`` for one global ranking) by ``score`` desc,
+    ties to the lower ``tie``. The oracles spell the same ORDER BY, so
+    both engines pick the same neighbours on exact cosine ties."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return F.row_number().over(w)
+
+
+def top_k(
+    df: DataFrame, part, score: str, tie: str, k: int, rn: str = "rn"
+) -> DataFrame:
+    """The ``k`` best rows of ``df`` per ``part`` under ``house_rank``,
+    numbered 1..k in column ``rn``. An argmax (k = 1) filters ``rn = 1``,
+    as the oracle twins do.
+
+    Plan, for a corpus crossJoined with a broadcast ``probe_side``:
+    ``BroadcastNestedLoopJoin BuildRight`` (the corpus streams, never
+    shuffled) → ``WindowGroupLimit … Partial`` (each task keeps k rows
+    per partition key) → ``Exchange hashpartitioning(part)`` →
+    ``WindowGroupLimit … Final`` → ``Window``. Spark infers the group
+    limit from the ``rn`` filter, so the exchange carries at most
+    k × keys rows per task, not corpus × probes; tests/test_plans.py
+    pins this order for ``sim_knn_batch``."""
+    ranked = df.withColumn(rn, house_rank(part, score, tie))
+    return ranked.filter(F.col(rn) == 1 if k == 1 else F.col(rn) <= k)
+
+
+def nearest_centroid(
+    ne: DataFrame, cent: DataFrame, score: str, *cols: str
+) -> DataFrame:
+    """Each row of ``ne`` with its most similar ``cent`` row (a
+    ``probe_side`` with prefix ``c``), ties to the lower ``cent_id``:
+    ``cols``, ``cent_id`` and the cosine as ``score``."""
+    cos = cos_nrm("embedding", "ce", "nrm", "cnrm").alias(score)
+    cand = ne.crossJoin(cent).select(*cols, "cent_id", cos)
+    return top_k(cand, "vec_id", score, "cent_id", 1)
+
+
 def pairwise_cosine_exact(A):
     """All-pairs cosine of the rows of A (n×d float64 numpy), with the
     SAME IEEE operation order as ``cosine()`` / the DuckDB oracle's
@@ -221,27 +313,13 @@ def cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every vector to its nearest of 10 fixed centroids
     (vectors 0..9) by cosine — one k-means assignment step.
 
-    Centroids broadcast; argmin via row_number over a per-vector window.
-    The scan side stays partition-parallel at any scale.
+    Centroids broadcast; the argmax is ``nearest_centroid``'s per-vector
+    top-1. The scan side stays partition-parallel at any scale.
     """
-    e = load(spark, sf_dir, "embeddings")
-    cent = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            l2_norm("embedding").alias("cnrm"),
-        )
-    )
-    # vector norm computed once per row, not once per (row × centroid)
-    ne = e.select("vec_id", "label", "embedding", l2_norm("embedding").alias("nrm"))
-    cos = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("cent_id"))
-    return (
-        ne.crossJoin(cent)
-        .select("vec_id", "label", "cent_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", F.col("cent_id").alias("nearest_centroid"), "cosine")
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id", "label")
+    cent = probe_side(ne, F.col("vec_id") < 10, "cent_id", "c")
+    return nearest_centroid(ne, cent, "cosine", "vec_id", "label").select(
+        "vec_id", "label", F.col("cent_id").alias("nearest_centroid"), "cosine"
     )
 
 
@@ -377,9 +455,9 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches ALL 4 bits in ANY table (AND within a table for precision,
     OR across tables for recall -- the standard hyperplane-LSH layout).
     Hyperplanes are deterministic ±1 sign (Rademacher) projections from
-    splitmix64 -- no RNG state, reproducible on any cluster, and (late
-    r6) exactly replicable in DuckDB SQL, which upgrades this query
-    from rows-only to a FULL value oracle.
+    splitmix64 -- no RNG state, reproducible on any cluster, and
+    exactly replicable in DuckDB SQL, which makes this query a FULL
+    value oracle rather than rows-only.
 
     The 32 plane projections per vector are vectorized numpy per Arrow
     batch (``mapInPandas``): as expression trees they were 32
@@ -497,46 +575,25 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-seeded LSH this ANN variant gets a full value-hash oracle.
     Recall vs sim_knn_exact is additionally pinned in pytest.
     """
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select("vec_id", "label", "embedding", l2_norm("embedding").alias("nrm"))
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "label", "embedding", "nrm", "cent_id", cos_c.alias("cos_c"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "embedding", "nrm", "cent_id")
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qe"), F.col("nrm").alias("qnrm")
-        )
-    )
-    cos_q = dot(F.col("ce"), F.col("qe")) / (F.col("cnrm") * F.col("qnrm"))
-    w_probe = Window.orderBy(F.desc("cos_q"), F.asc("cent_id"))
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id", "label")
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    assigned = nearest_centroid(
+        ne, cent, "cos_c", "vec_id", "label", "embedding", "nrm"
+    ).select("vec_id", "label", "embedding", "nrm", "cent_id")
+    q = probe_side(ne, F.col("vec_id") == 0, "query_id", "q")
+    cos_q = cos_nrm("ce", "qe", "cnrm", "qnrm").alias("cos_q")
     probes = F.broadcast(
-        cent.crossJoin(q)
-        .select("cent_id", cos_q.alias("cos_q"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("cent_id")
+        top_k(
+            cent.crossJoin(q).select("cent_id", cos_q),
+            [], "cos_q", "cent_id", IVF_NPROBE,
+        ).select("cent_id")
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (F.col("nrm") * F.col("qnrm"))
+    rescore = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
     return (
         assigned.join(probes, "cent_id")
         .crossJoin(q)
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", "label", rescore.alias("cosine"))
+        .select("vec_id", "label", rescore)
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )
@@ -577,26 +634,13 @@ def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     once through the cross product, and the per-query window ranks
     only corpus × batch rows. At 100 TB: corpus stays partitioned, the
     probe batch replicates, and the top-k per query reduces before the
-    final exchange (partial TakeOrdered inside each partition)."""
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select("vec_id", "label", "embedding", l2_norm("embedding").alias("nrm"))
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    cos = dot(F.col("embedding"), F.col("qe")) / (F.col("nrm") * F.col("qnrm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cosine")
-    )
+    final exchange.
+
+    Plan: the ``top_k`` plan, with ``query_id`` as the partition key."""
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q")
+    top = top_k(probe_pairs(ne, q, "vec_id"), "query_id", "cosine", "vec_id", 3)
+    return top.select("query_id", "vec_id", "cosine")
 
 
 _IVF_BATCH_ORACLE = f"""
@@ -665,48 +709,28 @@ def sim_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine over the pruned candidates only. Fully deterministic
     (row_number tiebreakers everywhere) → full value-hash oracle, like
     the single-probe sim_ann_ivf."""
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select("vec_id", "label", "embedding", l2_norm("embedding").alias("nrm"))
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    assigned = nearest_centroid(ne, cent, "cos_c", "vec_id", "embedding", "nrm").select(
+        "vec_id", "embedding", "nrm", "cent_id"
     )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cos_c"), F.asc("cent_id"))
-    assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "label", "embedding", "nrm", "cent_id", cos_c.alias("cos_c"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "nrm", "cent_id")
-    )
-    q = ne.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cos_q = dot(F.col("ce"), F.col("qe")) / (F.col("cnrm") * F.col("qnrm"))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("cos_q"), F.asc("cent_id"))
+    # not broadcast: it meets only the centroids, the build side there
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q", broadcast=False)
+    cos_q = cos_nrm("ce", "qe", "cnrm", "qnrm").alias("cos_q")
     probes = F.broadcast(
-        cent.join(q)
-        .select("query_id", "cent_id", "qe", "qnrm", cos_q.alias("cos_q"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "cent_id", "qe", "qnrm")
+        top_k(
+            cent.join(q).select("query_id", "cent_id", "qe", "qnrm", cos_q),
+            "query_id", "cos_q", "cent_id", IVF_NPROBE,
+        ).select("query_id", "cent_id", "qe", "qnrm")
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (F.col("nrm") * F.col("qnrm"))
-    w_top = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
+    rescore = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
+    cand = (
         assigned.join(probes, "cent_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", rescore.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cosine")
+        .select("query_id", "vec_id", rescore)
     )
+    top = top_k(cand, "query_id", "cosine", "vec_id", 3)
+    return top.select("query_id", "vec_id", "cosine")
 
 
 @query(
@@ -864,27 +888,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select(
-        "vec_id", "embedding", l2_norm("embedding").alias("nrm")
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    cos = dot(F.col("embedding"), F.col("qe")) / (F.col("nrm") * F.col("qnrm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    cand = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "embedding", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_TOPN)
-        .drop("rn")
-    )
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q")
+    cand = top_k(
+        probe_pairs(ne, q, "vec_id", "embedding"),
+        "query_id", "cosine", "vec_id", MMR_TOPN,
+    ).drop("rn")
 
     out_schema = (
         "query_id bigint, vec_id bigint, mmr_rank int, mmr_score double"
@@ -896,7 +905,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         rel = pdf["cosine"].to_numpy(dtype=np.float64)
         # in-order fold (not BLAS) so candidate-pair cosines are
         # bit-identical to the oracle's list_sum — what makes the
-        # unrolled greedy CTE twin hash-match (late r6)
+        # unrolled greedy CTE twin hash-match
         sims = pairwise_cosine_exact(vecs)
         n = len(pdf)
         picked: list[int] = []
@@ -1349,9 +1358,10 @@ PQ_TOPK = 10
 
 def _sub_l2sq_sql(a: str, b: str, m: int) -> str:
     """In-order double L2² of subspace m (1-based slice) of two arrays —
-    Spark SQL string (r12: the Column/lambda form cost ~25 py4j round
-    trips per call × 8 calls per emb_ann_pq invocation; same fold
-    order, so the cross-engine ranking boundary is unchanged)."""
+    Spark SQL string, parsed once (the Column/lambda form costs ~25
+    py4j round trips per call × 8 calls per emb_ann_pq build); same
+    fold order as the Column form, so the ranking boundary matches
+    the oracle's."""
     lo = m * PQ_SUBDIM + 1
     return (
         f"aggregate(zip_with(slice({a}, {lo}, {PQ_SUBDIM}), "
@@ -1649,7 +1659,7 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums — so the full 3-round trajectory is hash-identical to the
     unrolled recursive oracle (no float drift can flip an assignment).
 
-    Scale shape (the sanctioned k-means pattern VERDICT r6 names):
+    Scale shape (the sanctioned k-means pattern):
     per round, centroids collect to the driver as K·64 scalars
     (# driver-scalar) and re-enter as BROADCAST literals — the data-
     sized work is one scan computing K vectorized array-expression
@@ -1679,7 +1689,7 @@ def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     factored so dedup_semantic_clusters composes components over the
     identical trajectory (both oracles share _kmeans_ctes).
 
-    r9 rework: the three UPDATE rounds run as Arrow kernels
+    The three UPDATE rounds run as Arrow kernels
     (mapInPandas emitting per-partition partial (cid, count, column
     sums) — all int64, order-free) instead of interpreted
     zip_with/aggregate HOF assignment plus a 64×-row posexplode
@@ -1691,22 +1701,17 @@ def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/check.py). The FINAL assignment stays an expression plan
     (array HOF) so downstream composition keeps a declarative
     lineage. (A flat-column q0..q63 form was tried first: 64-wide
-    codegen recompiled per round and planning blew up 6× — kernels
-    keep rounds off the janino path. Re-confirmed r13 with SQL-string
-    builds: unrolled 256-term rounds were still ~2× SLOWER than the
-    kernels — the cost is janino per round, not py4j — so the r9
-    kernel decision stands.)
+    codegen recompiled per round and planning blew up 6×; unrolled
+    256-term SQL-string rounds were still ~2× slower than the kernels
+    — the cost is janino per round, not py4j — so kernels keep rounds
+    off the janino path.)
 
-    r13 (VERDICT r12 Next #2): the final-assignment expression is now
-    built as ONE SQL string (least over K aggregate(zip_with(...))
-    encodings with literal centroid arrays) instead of Column algebra
-    — the old dist_enc path constructed ~300 py4j Column objects
-    (4×(64 lits + array + zip_with + aggregate)), 0.5-1.5 s of driver
-    build time per invocation at bench conditions (the emb_ann_pq /
-    dedup-family r12 recipe). The physical expression is identical
-    (same HOF, same literals), so exec and scale behavior are
-    unchanged; only the build cost drops. Interleaved A/B at sf0.1:
-    3.84 → 1.94 s min (value-identical; oracle-exact at 3 SFs)."""
+    The final-assignment expression is built as ONE SQL string (least
+    over K aggregate(zip_with(...)) encodings with literal centroid
+    arrays), not Column algebra, which would construct ~300 py4j
+    Column objects (4×(64 lits + array + zip_with + aggregate)) per
+    build. The physical expression is the same HOF over the same
+    literals either way, so only the build cost differs."""
     import math
 
     import numpy as np
@@ -1719,7 +1724,7 @@ def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _KM_K
 
     # driver-scalar markers: K seed vectors / K*64 centroid components
-    # per round — the sanctioned k-means pattern (VERDICT r6)
+    # per round — the sanctioned k-means pattern
     seed_rows = e.orderBy("vec_id").limit(k).collect()  # driver-scalar: seeds
     # (cid, vector) pairs — kept as explicit pairs so a cid whose
     # cluster empties in some round can DROP out of the candidate
@@ -2436,22 +2441,18 @@ def eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contingency is a ≤ labels×10-group combinable agg; everything
     after is cell-grain arithmetic.
 
-    r13 build+shape rework (the emb_kmeans_lloyd recipe, measured in
-    the same A/B — scratch/r13o_purity_ab.py): (1) the argmin encoding
-    is rendered as ONE SQL string parsed once instead of ~700 py4j
-    Column constructions (10×(64 lits + zip_with + aggregate)) — that
-    alone cut the bench-conf wall 2.17 → 1.16 s min; (2) the six
-    independent scalar subtrees (tot/marginals/purity/MI/entropies,
-    each a 2-phase agg over the checkpointed contingency, 12 Exchanges
-    + 5 BroadcastNestedLoopJoin attaches) fold into ONE linear window
+    Build and shape (as in emb_kmeans_lloyd): (1) the argmin encoding
+    is ONE SQL string parsed once, not ~700 py4j Column constructions
+    (10×(64 lits + zip_with + aggregate)); (2) the scalar outputs
+    (tot/marginals/purity/MI/entropies) come from ONE linear window
     pipeline over the cell-grain relation — marginals via
     partitionBy(label)/partitionBy(cid) windows, per-marginal terms
-    counted once through rn=1 guards, then a single global agg. Same
-    pico-quantized terms at the same grains, so the integer sums are
-    unchanged (oracle-exact 3 SFs); cell grain is alphabet-bounded, so
-    the single-partition global window is scale-safe. 1.08/1.42 s
-    min/med after (was 2.17/2.66); no checkpoint needed — the argmin
-    scan now has exactly one reader."""
+    counted once through rn=1 guards, then a single global agg —
+    rather than six independent 2-phase aggs over the contingency.
+    The pico-quantized terms sit at the same grains either way, so the
+    integer sums match the oracle; cell grain is alphabet-bounded, so
+    the single-partition global window is scale-safe; the argmin scan
+    has exactly one reader, so it needs no checkpoint."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -2459,7 +2460,7 @@ def eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = e.filter(F.col("vec_id") < 10).orderBy("vec_id").collect()  # driver-scalar: 10x64 centroid components
 
-    # one SQL string, parsed once (the _kmeans_final r13 recipe);
+    # one SQL string, parsed once (as in _kmeans_final);
     # pmod == % here because the encodings are nonnegative
     terms = []
     for r in cents:
@@ -2640,78 +2641,35 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: reuses the batch-IVF shape (assignment scan + broadcast
     probes + pruned candidate join) PLUS one exact brute-force pass
-    (corpus x 20 broadcast queries with per-partition partial
-    TakeOrdered); the audit join runs at 20x10 row grain. At 100 TB
+    (corpus x 20 broadcast queries, the ``top_k`` plan); the audit
+    join runs at 20x10 row grain. At 100 TB
     you'd sample queries exactly like this — the exact side is the
     expensive half, which is WHY it's an audit, not the serving
     path."""
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select(
-        "vec_id", "embedding", l2_norm("embedding").alias("nrm")
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q")
+    assigned = nearest_centroid(ne, cent, "cos_c", "vec_id", "embedding", "nrm").select(
+        "vec_id", "embedding", "nrm", "cent_id"
     )
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "embedding", "nrm", "cent_id", cos_c.alias("cos_c"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "nrm", "cent_id")
-    )
-    cos_q = dot(F.col("ce"), F.col("qe")) / (F.col("cnrm") * F.col("qnrm"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_q"), F.asc("cent_id")
-    )
+    cos_q = cos_nrm("ce", "qe", "cnrm", "qnrm").alias("cos_q")
     probes = F.broadcast(
-        cent.crossJoin(q)
-        .select("query_id", "cent_id", cos_q.alias("cos_q"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "cent_id")
+        top_k(
+            cent.crossJoin(q).select("query_id", "cent_id", cos_q),
+            "query_id", "cos_q", "cent_id", IVF_NPROBE,
+        ).select("query_id", "cent_id")
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    approx = (
+    rescore = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
+    approx = top_k(
         assigned.join(probes, "cent_id")
         .join(q, "query_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", rescore.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "vec_id")
-    )
-    exact = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", rescore.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 10)
-        .select(
-            F.col("query_id").alias("xq"), F.col("vec_id").alias("xv")
-        )
-    )
+        .select("query_id", "vec_id", rescore),
+        "query_id", "cosine", "vec_id", 10,
+    ).select("query_id", "vec_id")
+    exact = top_k(
+        probe_pairs(ne, q, "vec_id"), "query_id", "cosine", "vec_id", 10
+    ).select(F.col("query_id").alias("xq"), F.col("vec_id").alias("xv"))
     hits = (
         approx.join(
             exact,
@@ -2744,6 +2702,13 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vec_id % k — verified before choosing the predicate, per the
 # doc_id-%k-aliases-source lesson from text_char_bigram_entropy).
 _IVF_DELTA_SQL = f"(vec_id >= {IVF_NLIST} AND vec_id % 5 = 4)"
+
+
+def _ivf_delta_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``normed`` corpus plus the ``_IVF_DELTA_SQL`` flag ``is_delta``."""
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    delta = (F.col("vec_id") >= IVF_NLIST) & (F.col("vec_id") % 5 == 4)
+    return ne.withColumn("is_delta", delta)
 
 
 @query(
@@ -2824,40 +2789,16 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are order-free BIGINTs; means and growth are spelled-once
     divisions; the fence is a pure integer compare.
 
-    Plan: centroids broadcast (K×64 floats); assignment is map-side
-    over one corpus scan (at scale: over the DELTA only — baseline
-    counters are stored index metadata, recomputed here so the twin
-    can verify them); the groupBy collapses to list grain (K rows)
-    map-side via conditional aggregates — one pass, one tiny
-    shuffle."""
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select(
-        "vec_id",
-        "embedding",
-        l2_norm("embedding").alias("nrm"),
-        (
-            (F.col("vec_id") >= IVF_NLIST) & (F.col("vec_id") % 5 == 4)
-        ).alias("is_delta"),
-    )
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos"), F.asc("cent_id")
-    )
-    assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "is_delta", "cent_id", cos_c.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("is_delta", "cent_id", micro(F.col("cos")).alias("cos_micro"))
+    Plan: centroids broadcast (K×64 floats); assignment is the
+    ``top_k`` plan's map-side top-1 over one corpus scan (at scale:
+    over the DELTA only — baseline counters are stored index
+    metadata, recomputed here so the twin can verify them); the
+    groupBy collapses to list grain (K rows) map-side via conditional
+    aggregates — one pass, one tiny shuffle."""
+    ne = _ivf_delta_normed(spark, sf_dir)
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    assigned = nearest_centroid(ne, cent, "cos", "vec_id", "is_delta").select(
+        "is_delta", "cent_id", micro(F.col("cos")).alias("cos_micro")
     )
     g = assigned.groupBy("cent_id").agg(
         F.count(F.when(~F.col("is_delta"), F.lit(1)))
@@ -3079,14 +3020,10 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(digest < F.col("cutoff"))
         .select("vec_id", "label", "embedding")
     )
-    ne = sampled.select(
-        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
-    )
+    ne = normed(sampled, "vec_id", "label")
     a = ne.alias("a")
     b = ne.alias("b")
-    dist = F.lit(1.0) - dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
+    dist = F.lit(1.0) - cos_nrm("a.embedding", "b.embedding", "a.nrm", "b.nrm")
     w = Window.partitionBy("vec_id").orderBy("dist", "nbr")
     dists = (
         a.join(
@@ -3134,6 +3071,18 @@ def emb_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("sum_lnratio_pico").cast("double") / F.lit(1e12))
         ).alias("intrinsic_dim_micro"),
     )
+
+
+def _eval_pairs(
+    spark: SparkSession, sf_dir: str, *carry: str
+) -> tuple[DataFrame, DataFrame]:
+    """The ``normed`` corpus, and every (query, other vector) pair of the
+    20-query retrieval set that ``eval_*_at_k`` rank: ``query_id``,
+    ``carry``, ``rel`` (same label), ``vec_id`` and ``cosine``."""
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id", "label")
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q", "label")
+    rel = (F.col("label") == F.col("qlabel")).cast("int").alias("rel")
+    return ne, probe_pairs(ne, q, *carry, rel, "vec_id")
 
 
 _MAP_ORACLE = f"""
@@ -3206,42 +3155,14 @@ def eval_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an order-free integer sum; the final AP division is spelled
     once; queries with zero possible relevants yield NULL, not 0/0.
 
-    Plan: corpus × 20 broadcast queries with per-partition partial
-    TakeOrdered shape (same as sim_knn_batch); everything after the
-    top-10 filter is 200-row grain."""
-    ne = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
+    Plan: corpus × 20 broadcast queries in the ``top_k`` plan (as
+    sim_knn_batch); everything after the top-10 filter is 200-row
+    grain."""
+    ne, pairs = _eval_pairs(spark, sf_dir, "qlabel")
     lc = F.broadcast(
         ne.groupBy("label").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    ranked = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "qlabel",
-            (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
-            "vec_id",
-            rescore.alias("cosine"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 10)
-    )
+    ranked = top_k(pairs, "query_id", "cosine", "vec_id", 10)
     w_cum = (
         Window.partitionBy("query_id")
         .orderBy("rn")
@@ -3526,7 +3447,7 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- IVF rebalance apply (r10: consumes sim_ann_ivf_incremental) ----------
+# --- IVF rebalance apply (consumes sim_ann_ivf_incremental's verdict) ------
 
 _REBAL_PREFIX_SQL = f"""
     e AS (
@@ -3642,11 +3563,10 @@ def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the argmax and ties break toward sub 0, so IEEE noise can
     never flip a membership (the house argmax-on-quantized rule).
 
-    Plan (r11 rework — VERDICT r10 Next #6, four checkpoint reads →
-    TWO; warm wall ~1.0 s → ~0.7 s at sf0.1): one corpus scan feeds
-    the broadcast-centroid assignment argmax (WindowGroupLimit partial
-    below the exchange — map-side top-1, verified in r9); the
-    assignment is eagerly checkpointed and then read exactly twice.
+    Plan: one corpus scan feeds the broadcast-centroid assignment
+    argmax (the ``top_k`` plan: a map-side top-1 below the exchange);
+    the assignment is eagerly checkpointed and then read exactly
+    twice.
     Read 1 is ONE cent_id-grain aggregate that fuses the growth fence
     (conditional counts) with seed SELECTION AND LOOKUP — the hi/lo
     argmax structs carry the seed's embedding and norm as trailing
@@ -3658,40 +3578,12 @@ def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the pass-through leg is metadata (you would not rewrite
     unflagged lists); it is materialized here so the oracle can verify
     the complete index state."""
-    ne = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        l2_norm("embedding").alias("nrm"),
-        (
-            (F.col("vec_id") >= IVF_NLIST) & (F.col("vec_id") % 5 == 4)
-        ).alias("is_delta"),
-    )
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos"), F.asc("cent_id")
-    )
+    ne = _ivf_delta_normed(spark, sf_dir)
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    cols = ("vec_id", "embedding", "nrm", "is_delta")
     assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "embedding", "nrm", "is_delta", "cent_id", cos_c.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            "is_delta",
-            "cent_id",
-            micro(F.col("cos")).alias("cos_micro"),
-        )
+        nearest_centroid(ne, cent, "cos", *cols)
+        .select(*cols, "cent_id", micro(F.col("cos")).alias("cos_micro"))
         .localCheckpoint(eager=True)
     )
     stats = (
@@ -3741,10 +3633,7 @@ def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = assigned.join(seed_rel, "cent_id", "left")
     cm = F.when(F.col("se").isNull(), F.col("cos_micro")).otherwise(
-        micro(
-            dot(F.col("embedding"), F.col("se"))
-            / (F.col("nrm") * F.col("snrm"))
-        )
+        micro(cos_nrm("embedding", "se", "nrm", "snrm"))
     )
     rows = j.select(
         "vec_id",
@@ -3774,7 +3663,7 @@ def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-# --- reciprocal-rank + Matryoshka truncation audits (r10) ------------------
+# --- reciprocal-rank + Matryoshka truncation audits ------------------------
 
 _MRR_ORACLE = f"""
     WITH e AS (
@@ -3830,37 +3719,9 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs, never 0.
 
     Plan: identical shape to eval_map_at_k — corpus × 20 broadcast
-    queries, map-side top-10 (WindowGroupLimit partial below the
-    exchange), 200-row grain after the rank filter."""
-    ne = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    topk = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
-            "vec_id",
-            rescore.alias("cosine"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 10)
-    )
+    queries in the ``top_k`` plan, 200-row grain after the rank
+    filter."""
+    topk = top_k(_eval_pairs(spark, sf_dir)[1], "query_id", "cosine", "vec_id", 10)
     return (
         topk.groupBy("query_id")
         .agg(
@@ -3966,39 +3827,14 @@ def emb_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosines; the two row_numbers share the query_id partitioning (one
     exchange, two sorts); everything after the rank filter is
     ≤400-row grain."""
-    ne = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        "embedding",
-        l2_norm("embedding").alias("nrm"),
-        F.sqrt(
-            dot(
-                F.slice("embedding", 1, MRL_PREFIX_DIMS),
-                F.slice("embedding", 1, MRL_PREFIX_DIMS),
-            )
-        ).alias("pnrm"),
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("pnrm").alias("qpnrm"),
-        )
-    )
-    cos_full = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    cos_pre = dot(
-        F.slice("embedding", 1, MRL_PREFIX_DIMS),
-        F.slice("qe", 1, MRL_PREFIX_DIMS),
-    ) / (F.col("pnrm") * F.col("qpnrm"))
-    w_full = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_full"), F.asc("vec_id")
-    )
-    w_pre = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_pre"), F.asc("vec_id")
+
+    def pre(c: str) -> Column:
+        return F.slice(c, 1, MRL_PREFIX_DIMS)
+
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id", "label")
+    ne = ne.withColumn("pnrm", F.sqrt(dot(pre("embedding"), pre("embedding"))))
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q", "label").withColumn(
+        "qpnrm", F.sqrt(dot(pre("qe"), pre("qe")))
     )
     ranked = (
         ne.crossJoin(q)
@@ -4007,11 +3843,11 @@ def emb_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
             "vec_id",
-            cos_full.alias("cos_full"),
-            cos_pre.alias("cos_pre"),
+            cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cos_full"),
+            cos_nrm(pre("embedding"), pre("qe"), "pnrm", "qpnrm").alias("cos_pre"),
         )
-        .withColumn("rn_full", F.row_number().over(w_full))
-        .withColumn("rn_pre", F.row_number().over(w_pre))
+        .withColumn("rn_full", house_rank("query_id", "cos_full", "vec_id"))
+        .withColumn("rn_pre", house_rank("query_id", "cos_pre", "vec_id"))
         .filter((F.col("rn_full") <= 10) | (F.col("rn_pre") <= 10))
     )
     hits = ranked.groupBy("query_id").agg(
@@ -4040,7 +3876,7 @@ def emb_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id")
 
 
-# --- binary (sign-bit) embedding quantization audit (r10) -------------------
+# --- binary (sign-bit) embedding quantization audit ------------------------
 
 # bit d's place value; bit 63 spelled (-max-1) because DuckDB errors on
 # 1<<63 overflow (the dedup_simhash pack trick)
@@ -4124,17 +3960,14 @@ def emb_quantize_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hamming derive from the K-row aggregate, NOT from a second
     corpus pass — the no-cross-branch-CSE rule.
 
-    r11 profiling rework (VERDICT r10 Next #3): the 3.3 s-vs-0.17 s
-    twin gap was neither Catalyst compile nor execution — it was
-    PYTHON-SIDE expression construction. The Column-algebra form made
-    ~1,500 py4j round trips (64 whens for the pack + 66 agg columns +
-    128 conditional terms for maj/ham ≈ 3 s of driver wall measured by
-    phase: build 2.9-4.2 s / plan 0.1 s / exec 0.8 s warm). The same
-    expressions built as SQL STRINGS (one F.expr parse each) cut build
-    to 0.35 s; the 64 per-bit counters additionally pack 2-per-BIGINT
-    in 32-bit fields (the dedup_simhash recipe — safe to 2^31 vectors
-    per label, and it halves the partial-agg shuffle width at scale).
-    Warm total 4.1 s → 1.1 s at sf0.1, value-identical."""
+    Build cost: the expressions are SQL STRINGS (one F.expr parse
+    each), because the Column-algebra form makes ~1,500 py4j round
+    trips (64 whens for the pack + 66 agg columns + 128 conditional
+    terms for maj/ham) and its driver-side construction, not Catalyst
+    or execution, dominates the wall. The 64 per-bit counters pack
+    2-per-BIGINT in 32-bit fields (the dedup_simhash recipe — safe to
+    2^31 vectors per label, guarded below, and it halves the
+    partial-agg shuffle width at scale)."""
     e = load(spark, sf_dir, "embeddings")
 
     def bv(d: int) -> str:
@@ -4177,7 +4010,7 @@ def emb_quantize_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.col("n").alias("n_vecs"),
         "n_distinct_sigs",
-        # Packed-field overflow guard (ADVICE r11): a label with
+        # Packed-field overflow guard: a label with
         # >= 2^31 vectors would overflow a 32-bit lo field into its hi
         # neighbour and unpack wrong with NO error — surface it as a
         # hard failure (one per-group comparison; null→0 good path).
@@ -4194,7 +4027,7 @@ def emb_quantize_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("label")
 
 
-# --- IVF nprobe tuning sweep (r10) ------------------------------------------
+# --- IVF nprobe tuning sweep ------------------------------------------------
 
 NPROBE_SWEEP_MAX = 5  # sweep nprobe = 1..5 of the 10 coarse lists
 
@@ -4300,58 +4133,29 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers; the one recall division is spelled once.
 
     Plan: assignment + probe + rescore run ONCE (broadcast centroids
-    and queries, map-side argmax); only the 20-query candidate set —
-    not the corpus — is exploded 5×; exact top-10 is the same single
-    brute-force pass the audit pays. At 100 TB the sweep costs the
+    and queries, map-side argmax as in ``top_k``); only the 20-query
+    candidate set — not the corpus — is exploded 5×; exact top-10 is
+    the same single brute-force pass the audit pays. At 100 TB the sweep costs the
     same one scan as the audit."""
-    e = load(spark, sf_dir, "embeddings")
-    ne = e.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
-    cent = F.broadcast(
-        ne.filter(F.col("vec_id") < IVF_NLIST).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
+    ne = normed(load(spark, sf_dir, "embeddings"), "vec_id")
+    cent = probe_side(ne, F.col("vec_id") < IVF_NLIST, "cent_id", "c")
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q")
+    assigned = nearest_centroid(ne, cent, "cos_c", "vec_id", "embedding", "nrm").select(
+        "vec_id", "embedding", "nrm", "cent_id"
     )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    cos_c = dot(F.col("embedding"), F.col("ce")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("cent_id")
-    )
-    assigned = (
-        ne.crossJoin(cent)
-        .select("vec_id", "embedding", "nrm", "cent_id", cos_c.alias("cos_c"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "nrm", "cent_id")
-    )
-    cos_q = dot(F.col("ce"), F.col("qe")) / (F.col("cnrm") * F.col("qnrm"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_q"), F.asc("cent_id")
-    )
+    cos_q = cos_nrm("ce", "qe", "cnrm", "qnrm").alias("cos_q")
     probes = F.broadcast(
-        cent.crossJoin(q)
-        .select("query_id", "cent_id", cos_q.alias("cos_q"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= NPROBE_SWEEP_MAX)
-        .select("query_id", "cent_id", "pr")
+        top_k(
+            cent.crossJoin(q).select("query_id", "cent_id", cos_q),
+            "query_id", "cos_q", "cent_id", NPROBE_SWEEP_MAX, rn="pr",
+        ).select("query_id", "cent_id", "pr")
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
+    rescore = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
     cand = (
         assigned.join(probes, "cent_id")
         .join(q, "query_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "pr", rescore.alias("cosine"))
+        .select("query_id", "vec_id", "pr", rescore)
     )
     swept = cand.select(
         F.explode(
@@ -4361,25 +4165,12 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cosine",
     )
-    w_rank = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
+    topk = top_k(swept, ["nprobe", "query_id"], "cosine", "vec_id", 10).select(
+        "nprobe", "query_id", "vec_id"
     )
-    topk = (
-        swept.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 10)
-        .select("nprobe", "query_id", "vec_id")
-    )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    exact = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", rescore.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= 10)
-        .select(F.col("query_id").alias("xq"), F.col("vec_id").alias("xv"))
-    )
+    exact = top_k(
+        probe_pairs(ne, q, "vec_id"), "query_id", "cosine", "vec_id", 10
+    ).select(F.col("query_id").alias("xq"), F.col("vec_id").alias("xv"))
     return (
         topk.join(
             exact,
@@ -4470,44 +4261,16 @@ def eval_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     yield NULL recall/F1 (not 0/0), matching the MAP convention.
 
     Plan: the ranked top-10 relation is the eval_map_at_k plan
-    verbatim (corpus × 20 broadcast queries, per-partition TakeOrdered
-    shape); the k-sweep is a 3-row broadcast cross join AT 200-ROW
+    verbatim (corpus × 20 broadcast queries, the ``top_k`` plan);
+    the k-sweep is a 3-row broadcast cross join AT 200-ROW
     GRAIN (after the rn ≤ 10 filter), so the sweep itself is free.
     Everything downstream of the top-k filter is ≤600 rows regardless
     of corpus size."""
-    ne = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", l2_norm("embedding").alias("nrm")
-    )
-    q = F.broadcast(
-        ne.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
+    ne, pairs = _eval_pairs(spark, sf_dir, "qlabel")
     lc = F.broadcast(
         ne.groupBy("label").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    rescore = dot(F.col("embedding"), F.col("qe")) / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    ranked = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "qlabel",
-            (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
-            "vec_id",
-            rescore.alias("cosine"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= max(_PRK_KS))
-    )
+    ranked = top_k(pairs, "query_id", "cosine", "vec_id", max(_PRK_KS))
     ks = F.broadcast(
         spark.range(1).select(
             F.explode(F.array(*[F.lit(k) for k in _PRK_KS])).alias("k")

@@ -141,3 +141,100 @@ def test_quantize_only_through_helpers():
         f"{len(hits)} inline floor(x * scale + 0.5) sites; "
         "call exprs.micro / exprs.cents instead:\n" + "\n".join(hits)
     )
+
+
+def _ranks_house_rule(node):
+    """``node`` is ``Window….orderBy(F.desc(<x>), F.asc(<y>))``: a
+    window spelling the house (score desc, id asc) ranking rule."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "orderBy"
+        and len(node.args) == 2
+        and _is_f(node.args[0], "desc")
+        and _is_f(node.args[1], "asc")
+    ):
+        return False
+    base = node.func.value
+    while isinstance(base, (ast.Call, ast.Attribute)):
+        base = base.func if isinstance(base, ast.Call) else base.value
+    return isinstance(base, ast.Name) and base.id == "Window"
+
+
+# sim_rerank_rrf fuses two GLOBAL ranks (lexical and vector) of one
+# frame, not a per-probe top-k
+_HOUSE_RANK_HOMES = {"house_rank", "sim_rerank_rrf"}
+
+
+def test_top_k_only_through_helpers():
+    """The similarity family ranks neighbours only through
+    ``house_rank`` / ``top_k``, so the tie rule the oracles mirror has
+    one home: no (score desc, id asc) window elsewhere in
+    similarity.py."""
+    py = PACKAGE / "operators" / "similarity.py"
+    hits = []
+    for fn in ast.parse(py.read_text()).body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name in _HOUSE_RANK_HOMES:
+            continue
+        for node in ast.walk(fn):
+            if _ranks_house_rule(node):
+                hits.append(f"{py.relative_to(REPO)}:{node.lineno}")
+    assert not hits, (
+        f"{len(hits)} hand-written (desc, asc) ranking windows; "
+        "call similarity.top_k / house_rank instead:\n" + "\n".join(hits)
+    )
+
+
+def test_top_k_breaks_exact_ties_to_the_lower_id(spark):
+    """Duplicated embeddings tie bit-exactly on cosine; ``top_k`` must
+    keep the lower vec_id first (the oracles' ``ORDER BY … DESC,
+    vec_id``), and its cosines must be bit-equal to
+    ``pairwise_cosine_exact`` on the same array."""
+    import numpy as np
+
+    from data_integration_tool_spark.operators.similarity import (
+        cos_nrm,
+        normed,
+        pairwise_cosine_exact,
+        probe_side,
+        top_k,
+    )
+
+    # 3 = 1 and 4 = 2 exactly; rows listed out of id order
+    vecs = {
+        0: [1.0, 2.0, 3.0],
+        4: [1.0, 2.0, 2.0],
+        3: [3.0, 1.0, 2.0],
+        5: [2.0, 2.0, 2.0],
+        2: [1.0, 2.0, 2.0],
+        1: [3.0, 1.0, 2.0],
+    }
+    ids = sorted(vecs)
+    want_cos = pairwise_cosine_exact(np.array([vecs[i] for i in ids]))[0]
+    # (cosine desc, id asc) over the non-query ids
+    order = sorted(ids[1:], key=lambda i: (-want_cos[i], i))
+    assert want_cos[2] == want_cos[4] and want_cos[1] == want_cos[3]
+
+    df = spark.createDataFrame(
+        list(vecs.items()), "vec_id bigint, embedding array<float>"
+    )
+    ne = normed(df, "vec_id")
+    q = probe_side(ne, F.col("vec_id") == 0, "query_id", "q")
+    cand = (
+        ne.crossJoin(q)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine"),
+        )
+    )
+    # k = 1 cuts inside the 2/4 tie, k = 4 inside the 1/3 tie
+    for k in (1, 4):
+        got = sorted(
+            (r.rn, r.vec_id, r.cosine)
+            for r in top_k(cand, "query_id", "cosine", "vec_id", k).collect()
+        )
+        want = [(n + 1, i, want_cos[i]) for n, i in enumerate(order[:k])]
+        assert got == want, (k, got, want)
+    assert order[:4] == [2, 4, 5, 1]

@@ -449,3 +449,28 @@ def test_checkpointed_subtrees_stay_single_when_inlined(spark, sf_dir):
             )
     finally:
         DataFrame.localCheckpoint = real
+
+
+def test_knn_batch_runs_the_top_k_plan(spark, sf_dir):
+    """``similarity.top_k``'s documented plan, bottom-up: the corpus
+    streams through ``BroadcastNestedLoopJoin BuildRight``, a partial
+    ``WindowGroupLimit`` keeps k rows per query in each task, and only
+    then does ``Exchange hashpartitioning(query_id)`` shuffle, ahead of
+    the final ``WindowGroupLimit``. No TakeOrdered is involved."""
+    from data_integration_tool_spark.operators.similarity import sim_knn_batch
+
+    plan = sim_knn_batch(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+
+    def first(*marks):
+        return next(i for i, ln in enumerate(lines) if all(m in ln for m in marks))
+
+    # the plan string prints the root first, so execution order reverses
+    top_down = [
+        first("WindowGroupLimit", "Final"),
+        first("Exchange hashpartitioning(query_id"),
+        first("WindowGroupLimit", "Partial"),
+        first("BroadcastNestedLoopJoin BuildRight"),
+    ]
+    assert top_down == sorted(top_down), plan
+    assert "TakeOrdered" not in plan, plan
