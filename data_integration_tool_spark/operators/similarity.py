@@ -103,12 +103,9 @@ def house_rank(part, score: str, tie: str) -> Column:
     return F.row_number().over(w)
 
 
-def top_k(
-    df: DataFrame, part, score: str, tie: str, k: int, rn: str = "rn"
-) -> DataFrame:
+def top_k(df: DataFrame, part, score: str, tie: str, k: int) -> DataFrame:
     """The ``k`` best rows of ``df`` per ``part`` under ``house_rank``,
-    numbered 1..k in column ``rn``. An argmax (k = 1) filters ``rn = 1``,
-    as the oracle twins do.
+    numbered 1..k in column ``rn``.
 
     Plan, for a corpus crossJoined with a broadcast ``probe_side``:
     ``BroadcastNestedLoopJoin BuildRight`` (the corpus streams, never
@@ -118,8 +115,8 @@ def top_k(
     limit from the ``rn`` filter, so the exchange carries at most
     k × keys rows per task, not corpus × probes; tests/test_plans.py
     pins this order for ``sim_knn_batch``."""
-    ranked = df.withColumn(rn, house_rank(part, score, tie))
-    return ranked.filter(F.col(rn) == 1 if k == 1 else F.col(rn) <= k)
+    ranked = df.withColumn("rn", house_rank(part, score, tie))
+    return ranked.filter(F.col("rn") <= k)
 
 
 def nearest_centroid(
@@ -3833,9 +3830,7 @@ def emb_mrl_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ne = normed(load(spark, sf_dir, "embeddings"), "vec_id", "label")
     ne = ne.withColumn("pnrm", F.sqrt(dot(pre("embedding"), pre("embedding"))))
-    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q", "label").withColumn(
-        "qpnrm", F.sqrt(dot(pre("qe"), pre("qe")))
-    )
+    q = probe_side(ne, F.col("vec_id") < 20, "query_id", "q", "label", "pnrm")
     ranked = (
         ne.crossJoin(q)
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -4126,9 +4121,10 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe; this sweeps the knob.
 
     Exactness: one candidate relation carries each (query, vector)
-    with the PROBE RANK of its list; candidacy at nprobe p is simply
-    pr ≤ p, so the sweep explodes each candidate into the nprobe
-    values it serves (sequence(pr, 5) — ≤5× a bounded relation) and
+    with the PROBE RANK ``rn`` of its list (``pr`` in the oracle);
+    candidacy at nprobe p is simply rn ≤ p, so the sweep explodes each
+    candidate into the nprobe values it serves (sequence(rn, 5) — ≤5×
+    a bounded relation) and
     re-ranks per (nprobe, query) with the house tiebreaks. Counts are
     exact integers; the one recall division is spelled once.
 
@@ -4147,19 +4143,19 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = F.broadcast(
         top_k(
             cent.crossJoin(q).select("query_id", "cent_id", cos_q),
-            "query_id", "cos_q", "cent_id", NPROBE_SWEEP_MAX, rn="pr",
-        ).select("query_id", "cent_id", "pr")
+            "query_id", "cos_q", "cent_id", NPROBE_SWEEP_MAX,
+        ).select("query_id", "cent_id", "rn")
     )
     rescore = cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine")
     cand = (
         assigned.join(probes, "cent_id")
         .join(q, "query_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "pr", rescore)
+        .select("query_id", "vec_id", "rn", rescore)
     )
     swept = cand.select(
         F.explode(
-            F.sequence(F.col("pr"), F.lit(NPROBE_SWEEP_MAX))
+            F.sequence(F.col("rn"), F.lit(NPROBE_SWEEP_MAX))
         ).alias("nprobe"),
         "query_id",
         "vec_id",

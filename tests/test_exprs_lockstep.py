@@ -143,16 +143,27 @@ def test_quantize_only_through_helpers():
     )
 
 
+def _sorts_desc(node):
+    """``node`` is a descending sort key: ``F.desc(x)``,
+    ``F.desc_nulls_*(x)`` or ``<expr>.desc()`` / ``.desc_nulls_*()``."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    if not node.func.attr.startswith("desc"):
+        return False
+    f_call = isinstance(node.func.value, ast.Name) and node.func.value.id == "F"
+    return len(node.args) == (1 if f_call else 0)
+
+
 def _ranks_house_rule(node):
-    """``node`` is ``Window….orderBy(F.desc(<x>), F.asc(<y>))``: a
-    window spelling the house (score desc, id asc) ranking rule."""
+    """``node`` is ``Window….orderBy(<desc key>, <tie key>, …)``: a
+    window spelling the house (score desc, then a tie key) ranking
+    rule, whatever form the tie key takes."""
     if not (
         isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "orderBy"
-        and len(node.args) == 2
-        and _is_f(node.args[0], "desc")
-        and _is_f(node.args[1], "asc")
+        and len(node.args) >= 2
+        and _sorts_desc(node.args[0])
     ):
         return False
     base = node.func.value
@@ -166,21 +177,26 @@ def _ranks_house_rule(node):
 _HOUSE_RANK_HOMES = {"house_rank", "sim_rerank_rrf"}
 
 
+def house_rule_windows(py):
+    """file:line of each (desc, tie) ranking window in ``py`` outside
+    ``_HOUSE_RANK_HOMES``, at module level or in any def."""
+    hits = []
+    for stmt in ast.parse(py.read_text()).body:
+        if isinstance(stmt, ast.FunctionDef) and stmt.name in _HOUSE_RANK_HOMES:
+            continue
+        for node in ast.walk(stmt):
+            if _ranks_house_rule(node):
+                hits.append(f"{py.relative_to(py.parents[2])}:{node.lineno}")
+    return hits
+
+
 def test_top_k_only_through_helpers():
     """The similarity family ranks neighbours only through
     ``house_rank`` / ``top_k``, so the tie rule the oracles mirror has
-    one home: no (score desc, id asc) window elsewhere in
-    similarity.py."""
-    py = PACKAGE / "operators" / "similarity.py"
-    hits = []
-    for fn in ast.parse(py.read_text()).body:
-        if not isinstance(fn, ast.FunctionDef) or fn.name in _HOUSE_RANK_HOMES:
-            continue
-        for node in ast.walk(fn):
-            if _ranks_house_rule(node):
-                hits.append(f"{py.relative_to(REPO)}:{node.lineno}")
+    one home: no (score desc, tie) window elsewhere in similarity.py."""
+    hits = house_rule_windows(PACKAGE / "operators" / "similarity.py")
     assert not hits, (
-        f"{len(hits)} hand-written (desc, asc) ranking windows; "
+        f"{len(hits)} hand-written (desc, tie) ranking windows; "
         "call similarity.top_k / house_rank instead:\n" + "\n".join(hits)
     )
 
@@ -193,9 +209,9 @@ def test_top_k_breaks_exact_ties_to_the_lower_id(spark):
     import numpy as np
 
     from data_integration_tool_spark.operators.similarity import (
-        cos_nrm,
         normed,
         pairwise_cosine_exact,
+        probe_pairs,
         probe_side,
         top_k,
     )
@@ -220,15 +236,7 @@ def test_top_k_breaks_exact_ties_to_the_lower_id(spark):
     )
     ne = normed(df, "vec_id")
     q = probe_side(ne, F.col("vec_id") == 0, "query_id", "q")
-    cand = (
-        ne.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cos_nrm("embedding", "qe", "nrm", "qnrm").alias("cosine"),
-        )
-    )
+    cand = probe_pairs(ne, q, "vec_id")
     # k = 1 cuts inside the 2/4 tie, k = 4 inside the 1/3 tie
     for k in (1, 4):
         got = sorted(
