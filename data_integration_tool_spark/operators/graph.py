@@ -22,6 +22,109 @@ _DAMPING = 0.85
 _ITERS = 3
 
 
+def _ckpt_bytes(df: DataFrame) -> int:
+    """mem+disk bytes of ``df``'s own materialized checkpoint: the RDD
+    behind its ``LogicalRDD``, looked up by id, so an unrelated persist
+    made after the checkpoint cannot change the answer. 0 while the
+    checkpoint is not materialized. Metadata read only; no job."""
+    rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return 0
+
+
+# The oracles' twin of copurchase_edges: the body of their `pairs` CTE.
+_COPURCHASE_EDGES_SQL = """
+            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
+            FROM lineitem a JOIN lineitem b
+              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+            WHERE a.l_orderkey % {every} = 0"""
+
+
+def copurchase_edges(
+    spark: SparkSession, sf_dir: str, every: int, eager: bool = False
+) -> DataFrame:
+    """The co-purchase (basket) graph: distinct part pairs ``(pa, pb)``
+    bought in the same order, oriented ``pa < pb``, over the orders
+    with ``l_orderkey % every == 0``.
+
+    The slice bounds the cost: the full basket graph at sf0.1 is dense
+    and near-regular (~1.2M edges over 20k parts, average degree 120),
+    so its wedge enumeration is inherent, not skew. Two slices are in
+    use: every 5th order, and every 20th for the all-pairs
+    neighbourhood queries, which have no degree-ordering escape, and
+    the builders that sit beside them. Production bounds by category
+    or time partition.
+
+    The result is checkpointed because every caller reads the edge list
+    from several branches (degree, adjacency, anti-join, counts), and
+    Catalyst does no common-subexpression elimination across branches:
+    without the cut each branch re-plans the self-join + distinct. The
+    lazy cut materializes inside the query's own job; ``eager=True``
+    materializes it now, for callers that read its size with
+    ``_ckpt_bytes`` or feed it to every round of an unrolled loop."""
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .filter(F.col("l_orderkey") % every == 0)
+        .select("l_orderkey", "l_partkey")
+    )
+    a = li.alias("a")
+    b = li.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .select(
+            F.col("a.l_partkey").alias("pa"),
+            F.col("b.l_partkey").alias("pb"),
+        )
+        .distinct()
+        .localCheckpoint(eager=eager)
+    )
+
+
+def both_ways(edges: DataFrame) -> DataFrame:
+    """Symmetric ``(node, nbr)`` adjacency of an oriented ``(pa, pb)``
+    edge list: every edge once in each direction."""
+    return edges.select(
+        F.col("pa").alias("node"), F.col("pb").alias("nbr")
+    ).unionAll(
+        edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
+    )
+
+
+def degrees(edges: DataFrame) -> DataFrame:
+    """``(node, d BIGINT)`` of an oriented ``(pa, pb)`` edge list: one
+    combinable count over the union of both endpoint columns."""
+    return (
+        edges.select(F.col("pa").alias("node"))
+        .unionAll(edges.select(F.col("pb").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    )
+
+
+def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event-type transition graph ``(src, dst, w BIGINT)``: how
+    often ``dst`` directly follows ``src`` in one user's events, ordered
+    by (ts, event_id). One lead() window plus a rollup to |types|² rows.
+    Eagerly checkpointed: the unrolled iterations read the edge list
+    about twice per round, and without the cut Catalyst re-runs the
+    events window scan for each reference."""
+    e = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        e.withColumn("nxt", F.lead("event_type").over(w))
+        .filter(F.col("nxt").isNotNull())
+        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
+        .localCheckpoint(eager=True)
+    )
+
+
 @query(
     "graph_pagerank",
     oracle="""
@@ -92,18 +195,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint per round (the dedup_components pattern) to stop
     lineage growth; dangling mass goes to teleport only — documented
     simplification, identical on both engines."""
-    e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        e.withColumn("nxt", F.lead("event_type").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    # The unrolled plan references the edge list ~2 per iteration; without
-    # a lineage cut Catalyst re-executes the events window scan each time.
-    # The reduced edge relation (|types|^2 rows) checkpoints once.
-    edges = edges.localCheckpoint(eager=True)
+    edges = transition_edges(spark, sf_dir)
     norm = edges.select(
         "src",
         "dst",
@@ -141,12 +233,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_triangles",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 5 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=5)}
         ),
         tri AS (
             SELECT count(*) AS n_triangles
@@ -184,36 +272,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-ordering the hub's pair list is the documented worst case.
     Output is a single reconciliation row (edge + triangle counts),
     both exact BIGINTs."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        # graph slice: the full basket graph at sf0.1 is dense and
-        # near-regular (~1.2M edges over 20k parts, avg degree 120), so
-        # its ~72M-wedge enumeration is inherent, not skew — bound the
-        # benched slice to every 5th order (predicate shared with the
-        # oracle); production bounds by category/time partition instead
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        # lazy checkpoint: pairs feeds the degree branch, BOTH degree
-        # joins, and the edge count — without the lineage cut Catalyst
-        # re-plans the self-join+distinct subtree per branch (no
-        # cross-branch CSE; same class as the r5 decon_ngram bug, found
-        # by plan inspection of the r6 original at 3.0 s)
-        .localCheckpoint(eager=False)
-    )
+    pairs = copurchase_edges(spark, sf_dir, 5)
     # Degree-ordered orientation — THE scale guard for triangle
     # counting: orient every edge from its lower-total-degree endpoint
     # (ties by key), then enumerate wedges only from edge SOURCES.
@@ -273,12 +332,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_link_predict",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ), adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
             UNION ALL
@@ -326,33 +381,13 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge set drops already-linked pairs. Jaccard = cn/(da+db−cn)
     is small-int division — exact IEEE on both engines, no
     quantization needed. The oracle keeps the textbook wedge self-join
-    + NOT EXISTS form. Every-20TH-order slice (quarter the triangle slice: all-pairs
-    common-neighbor counting has no degree-ordering escape — every
-    wedge IS a candidate — so the cost bound comes from the slice); lazy checkpoints cut the pairs/adjacency lineage
-    exactly as there."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = pairs.select(
-        F.col("pa").alias("node"), F.col("pb").alias("nbr")
-    ).unionAll(pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr")))
+    + NOT EXISTS form. Every-20th-order slice, a quarter of the
+    triangle slice: all-pairs common-neighbor counting has no
+    degree-ordering escape (every wedge IS a candidate), so the cost
+    bound comes from the slice. The edge list is the lazily
+    checkpointed one of ``copurchase_edges``."""
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    adj = both_ways(pairs)
     wd = Window.partitionBy("nbr")
     adj_deg = adj.withColumn("d", F.count(F.lit(1)).over(wd))
     nbrs = adj_deg.groupBy("node").agg(
@@ -407,11 +442,7 @@ _BFS_DEPTH = 3
 @query(
     "graph_bfs_hops",
     oracle=f"""
-        WITH RECURSIVE pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 5 = 0
+        WITH RECURSIVE pairs AS ({_COPURCHASE_EDGES_SQL.format(every=5)}
         ),
         sym AS (
             SELECT pa AS src, pb AS dst FROM pairs
@@ -446,30 +477,27 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same fixed-iteration posture as graph_pagerank: no driver-side
     state, and the exact result has a recursive-CTE value oracle (min
-    over all ≤depth walks ≡ BFS distance). Plan (r11 rework — textbook
-    VISITED-SET PRUNING, the VERDICT r10 ≤1.0 s ask): the edge set is
-    checkpointed, and each level expands only the NEWLY-DISCOVERED
-    frontier — `new_h = distinct(expand(new_{h-1})) ANTI-JOIN visited`
-    — so on a dense graph the expensive deep levels join a shrinking
-    frontier instead of the whole reachable set (hop-2 already covers
-    most of a basket component; the old form re-expanded it all at
-    hop 3). Checkpoints are LAZY (r12): every checkpointed frontier is
-    multiply-REFERENCED (next expansion + visited union + final
-    union), never re-derived, so all references share one RDD computed
-    inside the single final job (lazy took the bench wall 2.59 →
-    1.59 s min at sf0.1).
+    over all ≤depth walks ≡ BFS distance). Plan — visited-set
+    pruning: the edge set is checkpointed, and each level expands only
+    the NEWLY-DISCOVERED frontier — `new_h = distinct(expand(new_{h-1}))
+    ANTI-JOIN visited` — so on a dense graph the expensive deep levels
+    join a shrinking frontier instead of the whole reachable set
+    (hop-2 already covers most of a basket component). Checkpoints are
+    LAZY: every checkpointed frontier is multiply-REFERENCED (next
+    expansion + visited union + final union), never re-derived, so all
+    references share one RDD computed inside the single final job
+    (lazy took the bench wall 2.59 → 1.59 s min at sf0.1).
 
-    r13 (VERDICT r12 Next #1 — the stage-floor fuse): two structural
-    cuts, value-identical on all 28,394 sf0.1 rows.
-    (1) The final groupBy(seed,node).min(hops) was a provable NO-OP:
-    every level is internally distinct (`.distinct()` before the
-    anti-join) and anti-joined against `visited`, which contains ALL
-    previous levels — including the last level, which is pruned even
-    though it no longer feeds `visited` — so the unioned levels are
-    already (seed,node)-disjoint and a node's only row carries its
-    first-discovery level = its BFS distance. Dropping the aggregate
-    removes a full-result shuffle at any scale (verified: identical
-    row count AND values with/without at sf0.1).
+    Two structural cuts keep the stage count at its floor,
+    value-identical on all 28,394 sf0.1 rows.
+    (1) No final groupBy(seed,node).min(hops): it would be a provable
+    NO-OP. Every level is internally distinct (`.distinct()` before
+    the anti-join) and anti-joined against `visited`, which contains
+    ALL previous levels — including the last level, which is pruned
+    even though it no longer feeds `visited` — so the unioned levels
+    are already (seed,node)-disjoint and a node's only row carries its
+    first-discovery level = its BFS distance. Leaving the aggregate
+    out saves a full-result shuffle at any scale.
     (2) Levels 1-2 carry explicit broadcast hints on the frontier and
     visited sides: the h=1 frontier is the k=3 seed rows and the h=2
     frontier/visited are bounded by the seeds' 1-hop reach (k·d_max) —
@@ -479,24 +507,12 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at runtime when the frontier turns out small and demote
     it when it doesn't (measured: hinting h=3 too was within noise of
     the AQE-driven plan, 1.81 vs 1.92 s interleaved min under load ~2,
-    so the scale-safe form costs nothing). Compile-plan shuffles drop
-    6 → 2 vs the r12 form; interleaved min 2.31 → ~1.75-1.92 s under
+    so the scale-safe form costs nothing). Together the two cuts
+    leave 2 compile-plan shuffles where the form with the aggregate
+    and no hints had 6; interleaved min 2.31 → ~1.75-1.92 s under
     sustained loadavg ~2 (fresh-session quiet legs in BASELINE.md)."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 5 == 0
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .select("pa", "pb")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sym = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    pairs = copurchase_edges(spark, sf_dir, 5)
+    sym = both_ways(pairs).toDF("src", "dst")
     nodes = (
         pairs.select(F.col("pa").alias("node"))
         .union(pairs.select(F.col("pb").alias("node")))
@@ -564,12 +580,7 @@ _LPA_ROUND_SQL = """
 @query(
     "graph_lpa_communities",
     oracle=f"""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0 AND b.l_orderkey % 20 = 0
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ),
         adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
@@ -603,14 +614,14 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the "which parts sell together as a theme" view. Output: communities
     with ≥2 members, their size and node range.
 
-    Plan (r10 rework, 1.48 s → ~0.7 s warm at sf0.1): the fixed
-    iteration count unrolls into ONE Catalyst plan — no driver loop, no
-    state — with three algebraic reductions the unrolled CTE oracle
-    keeps in general form:
-    (1) the edge set is EAGERLY checkpointed (the r9 lesson: a lazy
-        localCheckpoint does NOT dedupe a subtree the single final job
-        consumes 2+ times — here the self-join+distinct fed every round
-        twice via the adj union);
+    Plan (~0.7 s warm at sf0.1, 1.48 s without the reductions
+    below): the fixed iteration count unrolls into ONE Catalyst plan —
+    no driver loop, no state — with three algebraic reductions the
+    unrolled CTE oracle keeps in general form:
+    (1) the edge set is EAGERLY checkpointed: a lazy localCheckpoint
+        does NOT dedupe a subtree the single final job consumes 2+
+        times, and here the edge list feeds every round twice via the
+        adj union;
     (2) round 1 collapses: with identity initialization every vote
         count over a DISTINCT edge set is exactly 1, so majority with
         the (count desc, label asc) tiebreak degenerates to
@@ -624,25 +635,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape GraphFrames' LPA lowers to, here with a full value
     oracle via unrolled CTEs.
     """
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = pairs.select(F.col("pa").alias("node"), F.col("pb").alias("nbr")).unionAll(
-        pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    adj = both_ways(copurchase_edges(spark, sf_dir, 20, eager=True))
     # round 1 collapsed (reduction 2 above)
     labels = adj.groupBy("node").agg(F.min("nbr").alias("label"))
     for _ in range(_LPA_ROUNDS - 1):
@@ -674,7 +667,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KCORE_K = 12
 _KCORE_ROUNDS = 5
-# Size guard for the per-round deg broadcast (r14): deg is node-grain
+# Size guard for the per-round deg broadcast: deg is node-grain
 # and strictly smaller than the edge set it aggregates, so broadcasting
 # it is safe whenever the round's MATERIALIZED edge checkpoint is under
 # this many bytes (mem+disk, read from the block manager — no extra
@@ -682,18 +675,6 @@ _KCORE_ROUNDS = 5
 # memory at any core count; at graph scale the guard fails and the
 # joins stay AQE-driven (demotable, skew-handled).
 _KCORE_BCAST_EDGE_BYTES = 64 << 20
-
-
-def _ckpt_bytes(df: DataFrame) -> int:
-    """mem+disk bytes of ``df``'s own materialized checkpoint: the RDD
-    behind its ``LogicalRDD``, looked up by id, so an unrelated persist
-    made after the checkpoint cannot change the answer. 0 while the
-    checkpoint is not materialized. Metadata read only; no job."""
-    rdd_id = df._jdf.queryExecution().logical().rdd().id()
-    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
-        if info.id() == rdd_id:
-            return int(info.memSize() + info.diskSize())
-    return 0
 
 
 def _kcore_oracle() -> str:
@@ -708,12 +689,7 @@ def _kcore_oracle() -> str:
     round fan-out (the Catalyst no-CSE trap, DuckDB edition)."""
     k, rounds = _KCORE_K, _KCORE_ROUNDS
     ctes = [
-        """e0 AS MATERIALIZED (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 5 = 0
+        f"""e0 AS MATERIALIZED ({_COPURCHASE_EDGES_SQL.format(every=5)}
         )"""
     ]
     for r in range(1, rounds + 1):
@@ -783,24 +759,23 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the round count bounded by the peeling depth, not the graph
     size.
 
-    r13: the per-round endpoint joins carried hard F.broadcast hints
-    on `deg` — a NODE-grain relation, i.e. graph-scale at 100 TB, and
-    a hard hint can never be demoted (the dedup_simhash r12 hazard
-    class). The hints were removed in r13. (Two rejected
-    alternatives, same session: a shared-deg subplan and a
-    window+edge-grain-min form that removes the degree join entirely
-    — the window form is ~60% SLOWER (3.95 vs 2.47 s min) because
-    per-round wall is job-barrier-dominated, not join-dominated.)
+    No hard F.broadcast hint on `deg`: it is a NODE-grain relation,
+    i.e. graph-scale at 100 TB, and a hard hint can never be demoted.
+    (Two rejected alternatives, same session: a shared-deg subplan
+    and a window+edge-grain-min form that removes the degree join
+    entirely — the window form is ~60% SLOWER (3.95 vs 2.47 s min)
+    because per-round wall is job-barrier-dominated, not
+    join-dominated.)
 
-    r14 (VERDICT r13 Next #3): the executed per-round plans
-    (history/plans/r14/graph_kcore_round3_before.txt) show AQE DOES promote
-    both endpoint joins to BroadcastHashJoin at sf0.1 — but only
-    after the initial SortMergeJoin plan has already SHUFFLED the
+    Hint-free is not free either: the executed per-round plans
+    (history/plans/r14/graph_kcore_round3_before.txt) show AQE DOES
+    promote both endpoint joins to BroadcastHashJoin at sf0.1 — but
+    only after the initial SortMergeJoin plan has already SHUFFLED the
     edge relation by pa as a materialized ShuffleQueryStage (AQE
     converts the join, not the already-submitted exchange), so every
-    round pays one full shuffle write of the edge set that the r12
-    compile-time hint never paid (A/B: hint-free 2.93/3.24 vs hinted
-    2.68/2.97 s min/med of 7). Fix: a SIZE-GUARDED broadcast — the
+    round pays one full shuffle write of the edge set that a
+    compile-time hint never pays (A/B: hint-free 2.93/3.24 vs hinted
+    2.68/2.97 s min/med of 7). Hence a SIZE-GUARDED broadcast — the
     round's edge set is eagerly checkpointed, so its materialized
     bytes are known for free from the block manager
     (getRDDStorageInfo); deg (node-grain) is strictly smaller than
@@ -810,19 +785,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays AQE-driven (demotable, skew-handled) — no unconditional
     data-grain hint (pinned by the test: threshold 0 ⇒ zero
     F.broadcast calls)."""
-    li = load(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_orderkey") % 5 == 0).select(
-        "l_orderkey", "l_partkey"
-    )
-    b = a.select(
-        F.col("l_orderkey").alias("bo"), F.col("l_partkey").alias("pb")
-    )
-    e = (
-        a.join(b, (a.l_orderkey == b.bo) & (a.l_partkey < b.pb))
-        .select(F.col("l_partkey").alias("pa"), "pb")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = copurchase_edges(spark, sf_dir, 5, eager=True)
     e_bytes = _ckpt_bytes(e)
     prev_e = e
     kept_nodes: DataFrame | None = None  # the oracle's n{r} relation
@@ -833,27 +796,19 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ONE job per round: deg stays lazy (two copies of the
         # degree aggregate over the CHECKPOINTED edge RDD — bounded,
         # no re-expansion) and joins into both endpoint joins.
-        # Join strategy (r14, VERDICT r13 Next #3): when the round's
-        # materialized edge checkpoint is small, deg (node-grain,
-        # strictly smaller) gets an explicit broadcast hint — the
-        # AQE SMJ→BHJ conversion happens only AFTER the initial plan
-        # has shuffled the edge set as a query stage, so the hint
-        # removes one full edge shuffle per round; past the size
-        # guard the joins stay stats/AQE-driven (no hard hint on a
-        # graph-scale relation).
+        # Join strategy: when the round's materialized edge
+        # checkpoint is small, deg (node-grain, strictly smaller) gets
+        # an explicit broadcast hint — the AQE SMJ→BHJ conversion
+        # happens only AFTER the initial plan has shuffled the edge
+        # set as a query stage, so the hint removes one full edge
+        # shuffle per round; past the size guard the joins stay
+        # stats/AQE-driven (no hard hint on a graph-scale relation).
         # the single eager checkpoint is the round barrier. Local-mode
         # wall clock is dominated by these per-round job barriers
         # (~0.3 s each), not data — the in-process twin wins at
         # fixture scale exactly the way BASELINE.md's scheduling-
         # floor profile describes, and the ratio inverts with size.
-        deg = (
-            e.select(F.col("pa").alias("node"))
-            .unionAll(e.select(F.col("pb").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= _KCORE_K)
-            .select("node")
-        )
+        deg = degrees(e).filter(F.col("d") >= _KCORE_K).select("node")
         kept_nodes = deg
         degj = (
             F.broadcast(deg)
@@ -877,15 +832,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a node the degree filter keeps can still lose its last edge
     # in the same round when its neighbors drop).
     def deg_stats(edges: DataFrame, prefix: str) -> DataFrame:
-        return (
-            edges.select(F.col("pa").alias("node"))
-            .unionAll(edges.select(F.col("pb").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .agg(
-                (F.sum("d") / 2).cast("bigint").alias(f"{prefix}edges"),
-                F.min("d").alias(f"{prefix}min_deg"),
-            )
+        return degrees(edges).agg(
+            (F.sum("d") / 2).cast("bigint").alias(f"{prefix}edges"),
+            F.min("d").alias(f"{prefix}min_deg"),
         )
 
     assert kept_nodes is not None and prev_kept is not None
@@ -925,11 +874,7 @@ _ASSORT_DEN = "(2.0 * m * sjj - CAST(sj AS DOUBLE) * sj)"
 @query(
     "graph_degree_assortativity",
     oracle=f"""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 5 = 0
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=5)}
         ), deg AS (
             SELECT node, CAST(count(*) AS BIGINT) AS d
             FROM (
@@ -981,38 +926,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints; joining it back twice shuffles on node keys (AQE
     handles the hub skew); moments reduce map-side to a single row.
     Cost is bounded by the edge list, never edges²."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        # r13: this was the ONLY graph operator without a checkpoint on
-        # its shared edge relation — the degree subtree and the moment
-        # join each re-derived the self-join+distinct. Lazy checkpoint,
-        # the graph_clustering_coeff/graph_triangles pattern. A/B
-        # 1.89/2.25 → 1.36/1.54 s min/med (scratch/r13o_assort_ab.py,
-        # value-identical; oracle-exact 3 SFs).
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        pairs.select(F.col("pa").alias("node"))
-        .unionAll(pairs.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 5)
+    deg = degrees(pairs)
     dj = deg.select(F.col("node").alias("pa"), F.col("d").alias("j"))
     dk = deg.select(F.col("node").alias("pb"), F.col("d").alias("k"))
     m0 = (
@@ -1045,12 +960,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_clustering_coeff",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 5 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=5)}
         ), deg AS (
             SELECT node, CAST(count(*) AS BIGINT) AS d
             FROM (
@@ -1101,32 +1012,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE re-balances).  Cost is the triangle join, identical to
     graph_triangles' class; the three scalar relations combine via
     broadcast single-row cross joins."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-    )
-    pairs = pairs.localCheckpoint(eager=False)
-    deg = (
-        pairs.select(F.col("pa").alias("node"))
-        .unionAll(pairs.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 5)
+    deg = degrees(pairs)
     w = deg.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.sum(F.col("d") * (F.col("d") - 1) / 2)
@@ -1164,12 +1051,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_adamic_adar",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ), adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
             UNION ALL
@@ -1223,42 +1106,18 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the node-grain term relation joins into the adjacency
     before wedge formation — no per-wedge degree join; wedge pairs
     form on the center node exactly as graph_link_predict; anti-join
-    drops existing edges; TakeOrdered keeps 50. r13: the join carried
-    a hard F.broadcast(term) hint — term is node-grain, i.e.
-    graph-scale at 100 TB, and a hard hint can never be demoted (the
-    dedup_simhash r12 hazard class). Hint removed; the query runs
-    AQE-on (graph tag), so the runtime planner picks broadcast off
-    measured sizes when term is genuinely small. Measured in-process
-    A/B (min/med of 5): hint 1.39/1.47 s vs hint-free 1.18/1.30 s —
+    drops existing edges; TakeOrdered keeps 50. No F.broadcast(term)
+    hint: term is node-grain, i.e. graph-scale at 100 TB, and a hard
+    hint can never be demoted. The query runs AQE-on (graph tag), so
+    the runtime planner picks broadcast off measured sizes when term
+    is genuinely small. Measured in-process A/B (min/med of 5): hint
+    1.39/1.47 s vs hint-free 1.18/1.30 s —
     the hint-free form is ~13% FASTER locally, because the SMJ on
     `node` establishes exactly the partitioning the wedge self-join
     needs (one exchange shared), while the broadcast form left adj
     unpartitioned and the wedge join re-shuffled both arms."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = pairs.select(
-        F.col("pa").alias("node"), F.col("pb").alias("nbr")
-    ).unionAll(
-        pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    adj = both_ways(pairs)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     term = deg.filter(F.col("d") >= 2).select(
         "node",
@@ -1303,12 +1162,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_harmonic_centrality",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ), adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
             UNION ALL
@@ -1353,31 +1208,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates BEFORE the anti-join vs the edge list removes
     distance-1 pairs; per-node counts are one combinable agg;
     TakeOrdered keeps the top 100 with a node tiebreak."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = pairs.select(
-        F.col("pa").alias("node"), F.col("pb").alias("nbr")
-    ).unionAll(
-        pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    adj = both_ways(copurchase_edges(spark, sf_dir, 20))
     wa = adj.select("node", F.col("nbr").alias("u"))
     wb = adj.select(F.col("node").alias("node2"), F.col("nbr").alias("v"))
     two = (
@@ -1427,12 +1258,7 @@ _MOD_TERM = (
 @query(
     "graph_modularity",
     oracle=f"""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0 AND b.l_orderkey % 20 = 0
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ),
         adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
@@ -1514,30 +1340,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one two-sided label join over the EDGE list (both sides keyed on
     node — shares the adjacency partitioning), and a community-grain
     fold."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = pairs.select(
-        F.col("pa").alias("node"), F.col("pb").alias("nbr")
-    ).unionAll(
-        pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    adj = both_ways(pairs)
     nodes = adj.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(_LPA_ROUNDS):
@@ -1633,12 +1437,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_edge_embeddedness",
-    oracle="""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0
+    oracle=f"""
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ), adj AS (
             SELECT pa AS node, pb AS nbr FROM pairs
             UNION ALL
@@ -1681,31 +1481,8 @@ def graph_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the triangle-closure shape, bounded by sum(deg^2) with the
     degree-cap rule) left-counts onto the edge list; the summary is
     a 1-row fold broadcast back; TakeOrdered keeps 50."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = pairs.select(
-        F.col("pa").alias("node"), F.col("pb").alias("nbr")
-    ).unionAll(
-        pairs.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    adj = both_ways(pairs)
     x = adj.select(F.col("node").alias("xa"), F.col("nbr").alias("cn"))
     y = adj.select(F.col("node").alias("xb"), F.col("nbr").alias("cn2"))
     wedge = (
@@ -1750,11 +1527,7 @@ _RICH_CLUB_KS = (2, 4, 8, 16)
 @query(
     "graph_rich_club",
     oracle=f"""
-        WITH pairs AS (
-            SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            WHERE a.l_orderkey % 20 = 0
+        WITH pairs AS ({_COPURCHASE_EDGES_SQL.format(every=20)}
         ),
         deg AS (
             SELECT node, CAST(count(*) AS BIGINT) AS d
@@ -1813,32 +1586,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-count aggregate answers all four thresholds in a
     single pass over the edge list; the k-sweep is a 4-row stack of
     that 1-row result."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 20 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        pairs.select(F.col("pa").alias("node"))
-        .unionAll(pairs.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    deg = degrees(pairs)
     da = deg.alias("da")
     db = deg.alias("db")
     edeg = (
@@ -1964,15 +1713,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution-join → groupBy(dst) rounds at edge grain with the
     out-weight relation joined (node-grain, broadcasts at any
     scale)."""
-    e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        e.withColumn("nxt", F.lead("event_type").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    edges = transition_edges(spark, sf_dir)
     wsum = edges.groupBy("src").agg(
         F.sum("w").cast("bigint").alias("tot")
     )
@@ -2135,7 +1876,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multiply-referenced relations (edges, nodes, the two
     weight-joined edge relations, and the final authority — the last
     hub half-step and the output join both read it). Checkpoints stay
-    EAGER here — measured, not assumed (r12): a lazy flip was A/B'd
+    EAGER here — measured, not assumed: a lazy flip was A/B'd
     both warm (parity, 2.36 vs 2.25 s) and across six fresh-process
     bench-conf sessions, where eager won consistently (2.91-3.45 vs
     3.47-4.57 s min) — the six-half-step join chain plans broadcast
@@ -2145,19 +1886,11 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced nested-normalizer form compounded to 2^6: measured 20 s
     vs 2 s.) ONE final job applies both 1-row max normalizers (never
     a driver round-trip).
-    NOTE (ADVICE r11): plan depth grows with _HITS_ITERS, and the
-    single-final-job shape relies on every intermediate auth/hub being
-    single-reference — keep checkpoints on anything that gains a
+    Invariant: the single-final-job shape relies on every
+    intermediate auth/hub being single-reference, and plan depth grows
+    with _HITS_ITERS — keep checkpoints on anything that gains a
     second reference, and re-measure if _HITS_ITERS is raised."""
-    e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        e.withColumn("nxt", F.lead("event_type").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    edges = transition_edges(spark, sf_dir)
     wsum = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("tot"))
     wsum2 = edges.groupBy("dst").agg(
         F.sum("w").cast("bigint").alias("tot2")

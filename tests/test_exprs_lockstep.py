@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import duckdb
 import pytest
@@ -246,3 +247,81 @@ def test_top_k_breaks_exact_ties_to_the_lower_id(spark):
         want = [(n + 1, i, want_cos[i]) for n, i in enumerate(order[:k])]
         assert got == want, (k, got, want)
     assert order[:4] == [2, 4, 5, 1]
+
+
+_PARTKEYS = {"l_partkey", "pa", "pb"}
+
+
+def _partkey(node):
+    """``node`` names a part-key column: ``<df>.l_partkey`` / ``.pa`` /
+    ``.pb``, or ``F.col`` of one, qualified or not (``"a.l_partkey"``)."""
+    if isinstance(node, ast.Attribute):
+        return node.attr in _PARTKEYS
+    return (
+        _is_f(node, "col")
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and str(node.args[0].value).rsplit(".", 1)[-1] in _PARTKEYS
+    )
+
+
+def _partkey_lt(node):
+    """``node`` is ``<part key> < <part key>``."""
+    return (
+        isinstance(node, ast.Compare)
+        and len(node.ops) == 1
+        and isinstance(node.ops[0], ast.Lt)
+        and _partkey(node.left)
+        and _partkey(node.comparators[0])
+    )
+
+
+_LINEITEM_SELF_JOIN_SQL = re.compile(
+    r"FROM\s+lineitem\s+a\s+JOIN\s+lineitem\s+b"
+)
+_COPURCHASE_HOMES = {"copurchase_edges", "_COPURCHASE_EDGES_SQL"}
+
+
+def copurchase_self_joins(py):
+    """file:line of each lineitem self-join on the part key in ``py``
+    outside ``_COPURCHASE_HOMES``: a ``.join`` / ``.filter`` /
+    ``.where`` whose condition compares two part-key columns with
+    ``<``, and each ``FROM lineitem a JOIN lineitem b`` in the source
+    text (the oracles)."""
+    src = py.read_text()
+    tree = ast.parse(src)
+    home = set()
+    for stmt in tree.body:
+        targets = getattr(stmt, "targets", [])
+        names = [getattr(stmt, "name", None)] + [
+            t.id for t in targets if isinstance(t, ast.Name)
+        ]
+        if _COPURCHASE_HOMES.intersection(names):
+            home.update(range(stmt.lineno, stmt.end_lineno + 1))
+    lines = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("join", "filter", "where")
+        ):
+            for arg in node.args + [k.value for k in node.keywords]:
+                lines.update(n.lineno for n in ast.walk(arg) if _partkey_lt(n))
+    for m in _LINEITEM_SELF_JOIN_SQL.finditer(src):
+        lines.add(src.count("\n", 0, m.start()) + 1)
+    where = py.relative_to(py.parents[2])
+    return [f"{where}:{line}" for line in sorted(lines - home)]
+
+
+def test_copurchase_edges_only_through_helper():
+    """The graph builders read the basket graph only through
+    ``copurchase_edges``, and their oracles only through its twin
+    ``_COPURCHASE_EDGES_SQL``, so the slice, the ``pa < pb``
+    orientation and the checkpoint have one home: no other lineitem
+    self-join on the part key in graph.py."""
+    hits = copurchase_self_joins(PACKAGE / "operators" / "graph.py")
+    assert not hits, (
+        f"{len(hits)} hand-written co-purchase edge lists; call "
+        "graph.copurchase_edges / _COPURCHASE_EDGES_SQL instead:\n"
+        + "\n".join(hits)
+    )
