@@ -1,7 +1,9 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. The line also carries "cpus" and
+how the driver JVM sized itself for them: "jvm_processors" (its
+availableProcessors()) and "jvm_gc" (its garbage collectors).
 
 Output contract: the driver keeps only the ~4 KB TAIL of stdout and
 json-parses the final line, so the final line must be compact —
@@ -86,6 +88,18 @@ def summary_line(timings: dict[str, float], sf: float | None,
     return line
 
 
+def jvm_sizing(spark) -> dict:
+    """How the driver JVM sized itself: the processor count its
+    ergonomics read (``session.get_spark`` caps it at the Spark slots)
+    and the garbage collectors that count picked."""
+    jvm = spark.sparkContext._jvm
+    gcs = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return {
+        "jvm_processors": jvm.java.lang.Runtime.getRuntime().availableProcessors(),
+        "jvm_gc": [b.getName() for b in gcs],
+    }
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(
         description="Time registered queries; print one JSON line."
@@ -115,6 +129,7 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_spark(app_name="bench", shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
+    sizing = jvm_sizing(spark)
     # keep the driver's stdout-tail parse window clean of the benign
     # accumulator-race ERROR spew (see benchconf for the root cause)
     benchconf.silence_dagscheduler_accumulator_spew(spark)
@@ -156,19 +171,21 @@ def main(argv: list[str] | None = None) -> None:
     timings = {name: round(min(runs), 2) for name, runs in per_run.items()}
     # None (not a crash) when the dir does not follow the sf<N> convention
     sf = benchconf.parse_sf(SF_DIR)
+    cpus = int(CPUS) if CPUS.isdigit() else CPUS
     detail = {
         "iters": iters,
         "sf": sf,
-        "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
+        "cpus": cpus,
+        **sizing,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
         "runs": per_run,
     }
-    extra = {}
+    extra = {"cpus": cpus, **sizing}
     if con is not None:
         detail["duckdb"] = duck_run
         sp_total = sum(min(r) for r in per_run.values())
         du_total = sum(min(r) for r in duck_run.values())
-        extra = {
+        extra |= {
             "duckdb_total_sec": round(du_total, 2),
             "ratio_spark_over_duckdb": round(sp_total / du_total, 3),
         }

@@ -107,6 +107,21 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+# The oracles' twin of transition_edges: the body of their `edges` CTE.
+_TRANSITION_EDGES_SQL = """
+            SELECT event_type AS src, nxt AS dst,
+                   CAST(count(*) AS BIGINT) AS w
+            FROM (
+                SELECT event_type,
+                       lead(event_type) OVER (
+                           PARTITION BY user_id
+                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
+                FROM events
+            )
+            WHERE nxt IS NOT NULL
+            GROUP BY src, nxt"""
+
+
 def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The event-type transition graph ``(src, dst, w BIGINT)``: how
     often ``dst`` directly follows ``src`` in one user's events, ordered
@@ -127,18 +142,8 @@ def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_pagerank",
-    oracle="""
-        WITH edges AS (
-            SELECT event_type AS src, nxt AS dst, count(*) AS w
-            FROM (
-                SELECT event_type,
-                       lead(event_type) OVER (
-                           PARTITION BY user_id
-                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
-                FROM events
-            )
-            WHERE nxt IS NOT NULL
-            GROUP BY src, nxt
+    oracle=f"""
+        WITH edges AS ({_TRANSITION_EDGES_SQL}
         ),
         norm AS (
             SELECT src, dst,
@@ -1567,7 +1572,7 @@ _RICH_CLUB_KS = (2, 4, 8, 16)
 )
 def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient φ(k) of the basket graph at degree
-    thresholds k ∈ {{2,4,8,16}}: among nodes of degree > k, the
+    thresholds k ∈ {2,4,8,16}: among nodes of degree > k, the
     fraction of possible edges actually present — rising φ(k) means
     the hubs preferentially interconnect (a hub oligopoly; relevant to
     both merchandising and to whether degree-based skew guards will
@@ -1642,18 +1647,7 @@ _PPR_DAMPING = 0.85
 @query(
     "graph_pagerank_personalized",
     oracle=f"""
-        WITH edges AS (
-            SELECT event_type AS src, nxt AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM (
-                SELECT event_type,
-                       lead(event_type) OVER (
-                           PARTITION BY user_id
-                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
-                FROM events
-            )
-            WHERE nxt IS NOT NULL
-            GROUP BY src, nxt
+        WITH edges AS ({_TRANSITION_EDGES_SQL}
         ),
         wsum AS (
             SELECT src, CAST(sum(w) AS BIGINT) AS tot
@@ -1804,18 +1798,7 @@ def _hits_oracle() -> str:
     last_a = f"a{_HITS_ITERS}"
     last_h = f"h{_HITS_ITERS}"
     return f"""
-        WITH edges AS MATERIALIZED (
-            SELECT event_type AS src, nxt AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM (
-                SELECT event_type,
-                       lead(event_type) OVER (
-                           PARTITION BY user_id
-                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
-                FROM events
-            )
-            WHERE nxt IS NOT NULL
-            GROUP BY src, nxt
+        WITH edges AS MATERIALIZED ({_TRANSITION_EDGES_SQL}
         ),
         wsum AS MATERIALIZED (
             SELECT src, CAST(sum(w) AS BIGINT) AS tot

@@ -3,9 +3,21 @@
 At test scale (sf0.001–sf0.1, single JVM ``local[N]``) the dominant cost
 is per-task scheduling overhead, so shuffle partitions stay small; at
 cluster scale the same code runs with the defaults left alone (AQE
-coalesces partitions at runtime). Nothing else in the engine depends on
-session-level config — every operator is a pure plan builder, so it runs
-correctly under whatever session the driver supplies.
+coalesces partitions at runtime). Operators are plan builders that run
+under whatever session the driver supplies, but some do touch session
+conf: ``io.load`` sets ``spark.sql.session.timeZone`` and
+``spark.sql.legacy.parquet.nanosAsLong`` and leaves them set, and
+``join_bucketed``, ``join_skew_aqe`` and the Python data source scope
+confs that they restore.
+
+The local driver JVM is sized to its Spark slots: when
+``SPARK_GRAFT_CPUS`` is an integer N, ``get_spark`` starts the JVM with
+``-XX:ActiveProcessorCount=min(N, usable CPUs)``. HotSpot's ergonomics
+read the host, not the slots, so without the flag a ``local[1]``
+session on a 4-CPU host still gets G1 with 4 GC threads and 3 JIT
+compiler threads, which cost more CPU and memory than one task slot
+needs. At one slot the JVM picks SerialGC and 2 compiler threads;
+at N >= usable CPUs its flags are the same as without the flag.
 """
 
 from __future__ import annotations
@@ -23,6 +35,11 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    When it is an integer, it also sizes the driver JVM's GC and JIT
+    thread pools: ``-XX:ActiveProcessorCount=min(N, usable CPUs)`` goes
+    at the front of ``spark.driver.extraJavaOptions``, ahead of any
+    value passed in ``extra_conf`` (see the module docstring for why).
+    The flag only acts when this call starts the JVM.
     AQE is enabled so partition counts / join strategies / skew handling
     re-plan at runtime — the main lever that lets the same plans run at
     sf0.001 locally and at 100 TB on a real cluster.
@@ -44,6 +61,11 @@ def get_spark(
         # that can interleave with it
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if cpus.isdigit():
+        procs = min(int(cpus), len(os.sched_getaffinity(0)))
+        opts = "spark.driver.extraJavaOptions"
+        conf[opts] = f"-XX:ActiveProcessorCount={procs} {conf.get(opts, '')}".rstrip()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -279,15 +279,30 @@ def _partkey_lt(node):
 _LINEITEM_SELF_JOIN_SQL = re.compile(
     r"FROM\s+lineitem\s+a\s+JOIN\s+lineitem\s+b"
 )
-_COPURCHASE_HOMES = {"copurchase_edges", "_COPURCHASE_EDGES_SQL"}
+_TRANSITION_LEAD_SQL = re.compile(r"lead\(\s*event_type\s*\)\s+OVER", re.I)
+_EDGE_LIST_HOMES = {
+    "copurchase_edges", "_COPURCHASE_EDGES_SQL",
+    "transition_edges", "_TRANSITION_EDGES_SQL",
+}
 
 
-def copurchase_self_joins(py):
-    """file:line of each lineitem self-join on the part key in ``py``
-    outside ``_COPURCHASE_HOMES``: a ``.join`` / ``.filter`` /
+def _event_type_lead(node):
+    """``node`` is ``F.lead("event_type")``."""
+    return (
+        _is_f(node, "lead")
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "event_type"
+    )
+
+
+def hand_written_edge_lists(py):
+    """file:line of each edge list in ``py`` built outside
+    ``_EDGE_LIST_HOMES``. Co-purchase: a ``.join`` / ``.filter`` /
     ``.where`` whose condition compares two part-key columns with
     ``<``, and each ``FROM lineitem a JOIN lineitem b`` in the source
-    text (the oracles)."""
+    text (the oracles). Event transitions: ``F.lead("event_type")``,
+    and each ``lead(event_type) OVER`` in the source text."""
     src = py.read_text()
     tree = ast.parse(src)
     home = set()
@@ -296,10 +311,12 @@ def copurchase_self_joins(py):
         names = [getattr(stmt, "name", None)] + [
             t.id for t in targets if isinstance(t, ast.Name)
         ]
-        if _COPURCHASE_HOMES.intersection(names):
+        if _EDGE_LIST_HOMES.intersection(names):
             home.update(range(stmt.lineno, stmt.end_lineno + 1))
     lines = set()
     for node in ast.walk(tree):
+        if _event_type_lead(node):
+            lines.add(node.lineno)
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
@@ -307,8 +324,9 @@ def copurchase_self_joins(py):
         ):
             for arg in node.args + [k.value for k in node.keywords]:
                 lines.update(n.lineno for n in ast.walk(arg) if _partkey_lt(n))
-    for m in _LINEITEM_SELF_JOIN_SQL.finditer(src):
-        lines.add(src.count("\n", 0, m.start()) + 1)
+    for pattern in (_LINEITEM_SELF_JOIN_SQL, _TRANSITION_LEAD_SQL):
+        for m in pattern.finditer(src):
+            lines.add(src.count("\n", 0, m.start()) + 1)
     where = py.relative_to(py.parents[2])
     return [f"{where}:{line}" for line in sorted(lines - home)]
 
@@ -318,10 +336,13 @@ def test_copurchase_edges_only_through_helper():
     ``copurchase_edges``, and their oracles only through its twin
     ``_COPURCHASE_EDGES_SQL``, so the slice, the ``pa < pb``
     orientation and the checkpoint have one home: no other lineitem
-    self-join on the part key in graph.py."""
-    hits = copurchase_self_joins(PACKAGE / "operators" / "graph.py")
+    self-join on the part key in graph.py. Likewise the event-transition
+    graph: ``transition_edges`` and ``_TRANSITION_EDGES_SQL`` hold the
+    only ``lead(event_type)`` window in graph.py."""
+    hits = hand_written_edge_lists(PACKAGE / "operators" / "graph.py")
     assert not hits, (
-        f"{len(hits)} hand-written co-purchase edge lists; call "
-        "graph.copurchase_edges / _COPURCHASE_EDGES_SQL instead:\n"
+        f"{len(hits)} hand-written edge lists; call graph.copurchase_edges"
+        " / _COPURCHASE_EDGES_SQL or transition_edges / "
+        "_TRANSITION_EDGES_SQL instead:\n"
         + "\n".join(hits)
     )
