@@ -1,9 +1,11 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}. The line also carries "cpus" and
-how the driver JVM sized itself for them: "jvm_processors" (its
-availableProcessors()) and "jvm_gc" (its garbage collectors).
+"queries": {name: sec}, "sf": ...}. The line also carries "cpus",
+"aqe_off_shuffle_partitions" (the shuffle partitions of the AQE-off
+queries, min(8, cpus); see benchconf) and how the driver JVM sized
+itself for them: "jvm_processors" (its availableProcessors()) and
+"jvm_gc" (its garbage collectors).
 
 Output contract: the driver keeps only the ~4 KB TAIL of stdout and
 json-parses the final line, so the final line must be compact —
@@ -172,15 +174,16 @@ def main(argv: list[str] | None = None) -> None:
     # None (not a crash) when the dir does not follow the sf<N> convention
     sf = benchconf.parse_sf(SF_DIR)
     cpus = int(CPUS) if CPUS.isdigit() else CPUS
+    extra = {"cpus": cpus,
+             "aqe_off_shuffle_partitions": benchconf.aqe_off_partitions(CPUS),
+             **sizing}
     detail = {
         "iters": iters,
         "sf": sf,
-        "cpus": cpus,
-        **sizing,
+        **extra,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
         "runs": per_run,
     }
-    extra = {"cpus": cpus, **sizing}
     if con is not None:
         detail["duckdb"] = duck_run
         sp_total = sum(min(r) for r in per_run.values())

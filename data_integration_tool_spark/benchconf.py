@@ -5,8 +5,20 @@ partitions, AQE), and it lives here: ``bench.py`` (default run and
 ``--duck``) and ``perfbench/`` both call ``apply_query_conf`` with the
 sets below, so their timings compare like for like.
 
-The classification rationale (measured at sf0.1) lives with the sets
-here; see BASELINE.md for the numbers.
+The rule, for a session with ``cpus`` Spark slots:
+
+- heavy (``heavy_set``): ``cpus`` shuffle partitions, AQE on;
+- AQE-pinned (``aqe_pinned_set``): 8 shuffle partitions, AQE on;
+- every other query: ``min(8, cpus)`` shuffle partitions, AQE off.
+
+At bench scale a light query's cost is per-task scheduling, not data.
+With AQE off nothing coalesces the reduce side at runtime, so each
+partition past the slot count is one more task, shuffle block and
+scheduling round that buys no parallelism. AQE-pinned queries keep 8
+because AQE coalesces them anyway and some of their outputs depend on
+the adaptive plan. At ``cpus >= 8`` (bench.py's 32 slots) the rule is
+the plain 8 / ``cpus`` split. The classification rationale (measured
+at sf0.1) lives with the sets here; see BASELINE.md for the numbers.
 """
 
 from __future__ import annotations
@@ -18,10 +30,11 @@ def heavy_set(specs) -> set[str]:
     """Queries that want full shuffle parallelism + AQE.
 
     Pair-generating dedup/similarity/decontamination queries shuffle
-    millions of rows and want CPUS shuffle partitions; everything else
-    at bench scale is dominated by task-scheduling overhead and wants
-    few partitions (AQE coalesces further). Measured at sf0.1: light
-    queries ~1.8x faster at 8, dedup_minhash ~1.4x faster at 32.
+    millions of rows and want one shuffle partition per slot; everything
+    else at bench scale is dominated by task-scheduling overhead and
+    wants at most 8 partitions, and no more than the slots when AQE is
+    off (see ``apply_query_conf``). Measured at sf0.1: light queries
+    ~1.8x faster at 8 than at 32, dedup_minhash ~1.4x faster at 32.
     "decontamination" joined in r10 (same pair-generating gram joins
     as dedup; its r9 misfiling as light was the only >1.5x shared-set
     regression of r9).
@@ -66,16 +79,31 @@ def aqe_pinned_set(specs) -> set[str]:
     ) - {"plan_join_strategy"}
 
 
+def aqe_off_partitions(cpus: str) -> int:
+    """Shuffle partitions of an AQE-off query: at most 8, and no more
+    than the session's ``cpus`` slots."""
+    return min(8, int(cpus))
+
+
 def apply_query_conf(spark, name: str, heavy: set[str],
                      aqe_pinned: set[str], cpus: str) -> None:
-    """Set the per-query runtime conf exactly as both harnesses must."""
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(cpus) if name in heavy else "8"
-    )
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        "true" if (name in heavy or name in aqe_pinned) else "false",
-    )
+    """Set the per-query runtime conf exactly as both harnesses must.
+
+    Heavy queries get ``cpus`` shuffle partitions, AQE-pinned ones 8,
+    both with AQE on. The rest run AQE off at ``min(8, cpus)``: with
+    nothing to coalesce the reduce side, a partition past the slot
+    count only adds a task per shuffle stage. ``cpus`` is the session's
+    slot count as a string.
+    """
+    aqe = name in heavy or name in aqe_pinned
+    if name in heavy:
+        parts = str(cpus)
+    elif aqe:
+        parts = "8"
+    else:
+        parts = str(aqe_off_partitions(cpus))
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    spark.conf.set("spark.sql.adaptive.enabled", "true" if aqe else "false")
 
 
 def silence_dagscheduler_accumulator_spew(spark) -> None:

@@ -286,11 +286,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 vs ~2 s degree-ordered (72M wedges -> bounded). The count
     # is orientation-invariant, so the simple key-ordered SQL twin
     # verifies it.
-    deg = (
-        pairs.select(F.explode(F.array("pa", "pb")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = degrees(pairs)
     p2 = (
         pairs.join(deg.withColumnRenamed("node", "pa"), "pa")
         .withColumnRenamed("d", "da")
@@ -1123,7 +1119,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned and the wedge join re-shuffled both arms."""
     pairs = copurchase_edges(spark, sf_dir, 20)
     adj = both_ways(pairs)
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+    deg = degrees(pairs)
     term = deg.filter(F.col("d") >= 2).select(
         "node",
         F.floor(
@@ -1213,7 +1209,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates BEFORE the anti-join vs the edge list removes
     distance-1 pairs; per-node counts are one combinable agg;
     TakeOrdered keeps the top 100 with a node tiebreak."""
-    adj = both_ways(copurchase_edges(spark, sf_dir, 20))
+    pairs = copurchase_edges(spark, sf_dir, 20)
+    adj = both_ways(pairs)
     wa = adj.select("node", F.col("nbr").alias("u"))
     wb = adj.select(F.col("node").alias("node2"), F.col("nbr").alias("v"))
     two = (
@@ -1234,9 +1231,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n2"))
     )
-    deg = adj.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    )
+    deg = degrees(pairs)
     return (
         deg.join(d2, deg.node == d2.u, "left")
         .select(
@@ -1372,7 +1367,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     labels = labels.localCheckpoint(eager=False)
     m1 = pairs.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    deg = degrees(pairs)
     comm = (
         labels.join(deg, "node")
         .groupBy(F.col("label").alias("community"))

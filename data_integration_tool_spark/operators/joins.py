@@ -1317,8 +1317,11 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot partitions with no force flag), plus forceOptimizeSkewedJoin
     because the demo's extra-shuffle guard would otherwise veto the
     split, and broadcast disabled so the tiny dim doesn't sidestep
-    the SMJ path under test. The fact side spreads to 16 map tasks
-    first so the hot partition spans multiple map outputs — AQE
+    the SMJ path under test. AQE itself is scoped on, and the join
+    to 8 shuffle partitions: a partition is skewed only against the
+    median of its siblings, so at one partition the hot key is never
+    split and ``skew_split`` would read 0. The fact side spreads to 16
+    map tasks first so the hot partition spans multiple map outputs — AQE
     splits along map boundaries (single-file inputs at small SF
     would otherwise leave nothing to split). The spread keys on
     pmod(xxhash64(raw orderkey), 320) rather than round-robin (r13):
@@ -1354,6 +1357,8 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.shuffle.partitions": "8",
     }
     # get(key, None) is None for keys not EXPLICITLY set — restore
     # must unset those, not pin them to today's engine default

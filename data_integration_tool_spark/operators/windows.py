@@ -343,15 +343,16 @@ def win_rolling_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 24-HOUR window per user — a TIME-range frame, not a row
     frame: each row aggregates whatever happened in the trailing day,
     however many events that is. Spark expresses it as rangeBetween
-    over the epoch-second ordering (identical semantics to the SQL
+    over the epoch-MICROSECOND ordering (identical semantics to the SQL
     INTERVAL frame, including ties: all rows at the same instant join
-    the frame). One shuffle on user_id; the frame scan is linear per
-    partition."""
+    the frame). Epoch seconds would truncate the fraction, so an event
+    a fraction of a second more than 24 h back would join the frame.
+    One shuffle on user_id; the frame scan is linear per partition."""
     e = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
-        .orderBy(F.col("ts").cast("long"))
-        .rangeBetween(-24 * 3600, 0)
+        .orderBy(F.unix_micros("ts"))
+        .rangeBetween(-24 * 3600 * 1_000_000, 0)
     )
     return e.select(
         "user_id",

@@ -1642,6 +1642,30 @@ def test_skew_aqe_flags_and_conf_restore(spark, sf_dir):
     assert sum(r.n_lines for r in rows) == n_lines
 
 
+def test_skew_aqe_flags_fire_at_one_ambient_partition(spark, sf_dir):
+    """The skew demo does not lean on the session's shuffle partition
+    count or AQE setting: at one partition with AQE off (perfbench's
+    local[1] light conf) the hot partition is still split, and both
+    ambient settings come back as they were."""
+    from data_integration_tool_spark.operators.joins import join_skew_aqe
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        rows = join_skew_aqe(spark, sf_dir).collect()
+        assert {k: spark.conf.get(k) for k in keys} == {
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.adaptive.enabled": "false",
+        }
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert rows
+    assert all(r.skew_split == 1 and r.smj == 1 for r in rows)
+
+
 def test_kmeans_lloyd_partition_and_inertia(spark, sf_dir):
     """Clusters must partition the corpus (sizes sum to the vector
     count, all K non-empty on the fixture), and the final inertia must
@@ -5047,6 +5071,32 @@ def test_plan_shape_audit_all_green_and_meaningful(spark, sf_dir):
         (F.col("l_quantity") + F.col("l_tax")) > 30
     )
     assert not has_pushed_filter(opaque, "GreaterThan(l_quantity")
+
+
+def test_plan_shape_audit_matches_oracle_with_cached_tables(
+        spark, sf_dir, monkeypatch):
+    """With the bench's base-table cache on (lineitem persisted in the
+    session, as perfbench and bench.py run), the audit still probes a
+    parquet scan and matches its oracle."""
+    from data_integration_tool_spark import io, registry
+    from data_integration_tool_spark.plans.advisor import plan_shape_audit
+
+    from .oracle_check import compare_frames, duck_connect
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", "1")
+    try:
+        for t in ("lineitem", "nation", "region"):
+            io.load(spark, sf_dir, t).count()
+        sp = plan_shape_audit(spark, sf_dir).toPandas()
+    finally:
+        for key in [k for k in io._TABLE_CACHE if k[:2] == (id(spark), sf_dir)]:
+            io._TABLE_CACHE.pop(key).unpersist(blocking=True)
+    con = duck_connect(sf_dir)
+    try:
+        du = con.execute(registry.specs()["plan_shape_audit"].oracle).fetchdf()
+    finally:
+        con.close()
+    assert not compare_frames(sp, du, "plan_shape_audit", exact=True)
 
 
 def test_rank_overlap_matches_python(spark, sf_dir):

@@ -346,3 +346,42 @@ def test_copurchase_edges_only_through_helper():
         "_TRANSITION_EDGES_SQL instead:\n"
         + "\n".join(hits)
     )
+
+
+def _degree_count(node):
+    """``node`` counts node degrees by hand: ``<df>.groupBy("node")
+    .agg(...F.count...)``, or ``F.explode(F.array("pa", "pb"))``."""
+    if _is_f(node, "explode") and node.args and _is_f(node.args[0], "array"):
+        return [getattr(a, "value", None) for a in node.args[0].args] == ["pa", "pb"]
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "agg"):
+        return False
+    grouped = node.func.value
+    return (
+        isinstance(grouped, ast.Call)
+        and isinstance(grouped.func, ast.Attribute)
+        and grouped.func.attr == "groupBy"
+        and [getattr(a, "value", None) for a in grouped.args] == ["node"]
+        and any(_is_f(n, "count") for a in node.args for n in ast.walk(a))
+    )
+
+
+def hand_written_degree_counts(py):
+    """file:line of each node-degree count in ``py`` outside ``degrees``."""
+    where = py.relative_to(py.parents[2])
+    hits = []
+    for fn in ast.parse(py.read_text()).body:
+        if isinstance(fn, ast.FunctionDef) and fn.name != "degrees":
+            hits += [f"{where}:{n.lineno}" for n in ast.walk(fn) if _degree_count(n)]
+    return hits
+
+
+def test_degree_counts_only_through_helper():
+    """graph.py counts node degrees through ``degrees`` alone. Its
+    executed plan equals the hand-written ``both_ways(pairs)
+    .groupBy("node")`` count's once Catalyst prunes ``nbr``."""
+    hits = hand_written_degree_counts(PACKAGE / "operators" / "graph.py")
+    assert not hits, (
+        f"{len(hits)} hand-written degree counts; call graph.degrees instead:\n"
+        + "\n".join(hits)
+    )

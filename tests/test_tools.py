@@ -27,9 +27,10 @@ def test_bench_duck_only_prints_summary_line(sf_dir, tmp_path):
     )
     summary = json.loads(out.stdout.strip().splitlines()[-1])
     assert {"metric", "value", "unit", "queries", "sf", "duckdb_total_sec",
-            "ratio_spark_over_duckdb", "cpus", "jvm_processors",
-            "jvm_gc"} <= set(summary)
+            "ratio_spark_over_duckdb", "cpus", "aqe_off_shuffle_partitions",
+            "jvm_processors", "jvm_gc"} <= set(summary)
     assert summary["cpus"] == 2
+    assert summary["aqe_off_shuffle_partitions"] == 2
     assert summary["jvm_processors"] == min(2, len(os.sched_getaffinity(0)))
     assert summary["jvm_gc"] and all(isinstance(g, str) for g in summary["jvm_gc"])
     assert set(summary["queries"]) == {"agg_group", "join_multiway"}
