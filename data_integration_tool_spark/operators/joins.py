@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..exprs import cents, micro
 from ..io import load
 from ..registry import query
+from ..session import scoped_conf
 
 
 @query(
@@ -1111,7 +1112,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     work = tempfile.mkdtemp(prefix="join_bucketed_")
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     try:
         spark.sql("DROP TABLE IF EXISTS jb_orders")
         spark.sql("DROP TABLE IF EXISTS jb_linesum")
@@ -1129,46 +1129,42 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .saveAsTable("jb_linesum")
         )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("jb_orders").join(
-            spark.table("jb_linesum"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        smj = "SortMergeJoin" in plan
-        zero_exchange = "Exchange" not in plan
-        bucketed_scan = (
-            "SelectedBucketsCount" in plan or "Bucketed: true" in plan
-        )
-        out = (
-            j.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("qty").alias("qty_sum"),
-                F.sum("rev_cents").alias("rev_cents"),
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            j = spark.table("jb_orders").join(
+                spark.table("jb_linesum"),
+                F.col("o_orderkey") == F.col("l_orderkey"),
             )
-            .select(
-                "o_orderpriority",
-                "n_orders",
-                "qty_sum",
-                "rev_cents",
-                F.lit(int(smj)).cast("bigint").alias("smj"),
-                F.lit(int(zero_exchange)).cast("bigint").alias(
-                    "zero_exchange"
-                ),
-                F.lit(int(bucketed_scan)).cast("bigint").alias(
-                    "bucketed_scan"
-                ),
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            smj = "SortMergeJoin" in plan
+            zero_exchange = "Exchange" not in plan
+            bucketed_scan = (
+                "SelectedBucketsCount" in plan or "Bucketed: true" in plan
             )
-            .orderBy("o_orderpriority")
-            # materialize before the temp tables vanish
-            .localCheckpoint(eager=True)
-        )
+            out = (
+                j.groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.sum("qty").alias("qty_sum"),
+                    F.sum("rev_cents").alias("rev_cents"),
+                )
+                .select(
+                    "o_orderpriority",
+                    "n_orders",
+                    "qty_sum",
+                    "rev_cents",
+                    F.lit(int(smj)).cast("bigint").alias("smj"),
+                    F.lit(int(zero_exchange)).cast("bigint").alias(
+                        "zero_exchange"
+                    ),
+                    F.lit(int(bucketed_scan)).cast("bigint").alias(
+                        "bucketed_scan"
+                    ),
+                )
+                .orderBy("o_orderpriority")
+                # materialize before the temp tables vanish
+                .localCheckpoint(eager=True)
+            )
     finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         spark.sql("DROP TABLE IF EXISTS jb_orders")
         spark.sql("DROP TABLE IF EXISTS jb_linesum")
         shutil.rmtree(work, ignore_errors=True)
@@ -1360,14 +1356,7 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.shuffle.partitions": "8",
     }
-    # get(key, None) is None for keys not EXPLICITLY set — restore
-    # must unset those, not pin them to today's engine default
-    prior: dict[str, str | None] = {
-        key: spark.conf.get(key, None) for key in scoped
-    }
-    try:
-        for key, val in scoped.items():
-            spark.conf.set(key, val)
+    with scoped_conf(spark, scoped):
         agg = (
             f.repartition(16, "spread")
             .drop("spread")
@@ -1382,12 +1371,6 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = agg._jdf.queryExecution().executedPlan().toString()
         skew_split = "skew=true" in plan
         smj = "SortMergeJoin" in plan
-    finally:
-        for key, val in prior.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     out = spark.createDataFrame(
         rows, "o_orderpriority string, n_lines long, rev_cents long"
     )

@@ -7,8 +7,9 @@ coalesces partitions at runtime). Operators are plan builders that run
 under whatever session the driver supplies, but some do touch session
 conf: ``io.load`` sets ``spark.sql.session.timeZone`` and
 ``spark.sql.legacy.parquet.nanosAsLong`` and leaves them set, and
-``join_bucketed``, ``join_skew_aqe`` and the Python data source scope
-confs that they restore.
+``join_bucketed``, ``join_skew_aqe`` and ``stream_python_source`` set
+confs only inside ``scoped_conf``, which puts each key back as it was:
+unset if it was unset, else at its prior value.
 
 The local driver JVM is sized to its Spark slots: when
 ``SPARK_GRAFT_CPUS`` is an integer N, ``get_spark`` starts the JVM with
@@ -23,6 +24,8 @@ at N >= usable CPUs its flags are the same as without the flag.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -69,3 +72,22 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the ``with`` block, then restore
+    each key, also when the block raises. ``spark.conf.get(key, None)``
+    is None only for a key nobody set; such a key is unset again, not
+    pinned to the engine default that ``spark.conf.get(key)`` shows."""
+    prior = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

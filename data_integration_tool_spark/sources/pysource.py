@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import scoped_conf
 
 N_ROWS = 10_000
 N_PARTS = 8
@@ -215,35 +216,33 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpoint's FIRST run; under a vanilla 200-partition session
     # the 4-restart drain schedules ~thousands of empty state tasks.
     # The checkpoint is fresh per call, so scope the knob down for the
-    # drain and restore it after (serial execution contexts only).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # drain (serial execution contexts only).
     try:
-        total, runs = 0, 0
-        while total < N_ROWS and runs < 3 * STREAM_BATCHES:
-            stream = spark.readStream.format("sensorstream").load()
-            agg = stream.groupBy("sensor").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("reading").alias("sum_reading"),
-            )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("stream_python_source_out")
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            runs += 1
-            total = (
-                spark.table("stream_python_source_out")
-                .agg(F.sum("n"))
-                .first()[0]
-                or 0
-            )
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            total, runs = 0, 0
+            while total < N_ROWS and runs < 3 * STREAM_BATCHES:
+                stream = spark.readStream.format("sensorstream").load()
+                agg = stream.groupBy("sensor").agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum("reading").alias("sum_reading"),
+                )
+                q = (
+                    agg.writeStream.format("memory")
+                    .queryName("stream_python_source_out")
+                    .outputMode("complete")
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination(120)
+                runs += 1
+                total = (
+                    spark.table("stream_python_source_out")
+                    .agg(F.sum("n"))
+                    .first()[0]
+                    or 0
+                )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(ckpt, ignore_errors=True)
     got = spark.table("stream_python_source_out").select(
         "sensor",

@@ -13,12 +13,200 @@ so every oracle casts ts to plain TIMESTAMP first (SURVEY.md §7e).
 
 from __future__ import annotations
 
+import math as _math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import micro
 from ..io import load
 from ..registry import query
+
+# --- the time-series inputs ----------------------------------------------
+# Each helper below has one DuckDB twin that the oracles splice in as a
+# CTE body, so a series is spelled once per engine.
+
+# The oracles' twin of daily_revenue: the body of their `daily` CTE.
+_DAILY_REVENUE_SQL = """
+            SELECT date_trunc('day', o_orderdate) AS day,
+                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
+                        AS BIGINT) AS rev
+            FROM orders GROUP BY 1"""
+
+
+def daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily revenue series ``(day, rev BIGINT)``: order totals
+    floored to whole currency units and summed per day, so every per-day
+    sum and every moment built on it is an exact BIGINT. One map-side
+    combinable aggregate whose output is the calendar span, not the
+    row count; not checkpointed, so each caller places its own cut."""
+    o = load(spark, sf_dir, "orders")
+    return o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
+        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+        .cast("bigint")
+        .alias("rev")
+    )
+
+
+_HOUR_US = 3600 * 1000000
+_DAY_US = 24 * _HOUR_US
+
+
+def _event_counts_sql(bucket_us: int) -> str:
+    """The oracles' twin of event_counts: the body of a `(t, x)` CTE."""
+    return f"""
+            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // {bucket_us} AS t,
+                   CAST(count(*) AS BIGINT) AS x
+            FROM events GROUP BY 1"""
+
+
+def event_counts(spark: SparkSession, sf_dir: str, bucket_us: int) -> DataFrame:
+    """The event-count series ``(t, x BIGINT)``: events per bucket of
+    ``bucket_us`` microseconds, ``t`` the bucket's index since the
+    epoch. Integer bucketing of ``unix_micros`` matches DuckDB's
+    ``epoch_us // bucket_us`` for every post-epoch event. One combinable
+    aggregate; the series is as long as the time span, in buckets."""
+    e = load(spark, sf_dir, "events")
+    return (
+        e.select(
+            (F.unix_micros(F.col("ts")) / F.lit(bucket_us))
+            .cast("bigint")
+            .alias("t")
+        )
+        .groupBy("t")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    )
+
+
+def _lag_moments_sql(L: int) -> str:
+    """The oracles' twin of lag_moments, over the `daily` CTE."""
+    lags = range(1, L + 1)
+    lagged = ", ".join(f"lag(rev, {k}) OVER (ORDER BY day) AS l{k}" for k in lags)
+    pairs = " UNION ALL ".join(
+        f"SELECT {k} AS lag, rev AS x, l{k} AS y FROM lagged"
+        f" WHERE l{k} IS NOT NULL"
+        for k in lags
+    )
+    return f"""
+            WITH lagged AS (SELECT rev, {lagged} FROM daily)
+            SELECT lag, CAST(count(*) AS BIGINT) AS n,
+                   CAST(sum(x) AS BIGINT) AS sx,
+                   CAST(sum(y) AS BIGINT) AS sy,
+                   CAST(sum(x * y) AS BIGINT) AS sxy,
+                   CAST(sum(x * x) AS BIGINT) AS sx2,
+                   CAST(sum(y * y) AS BIGINT) AS sy2
+            FROM ({pairs}) GROUP BY lag"""
+
+
+def lag_moments(series: DataFrame, L: int) -> DataFrame:
+    """Exact pair moments ``(lag, n, sx, sy, sxy, sx2, sy2)`` of a
+    ``(day, rev)`` series against itself at lags 1..L: x is today's
+    value, y the value k days earlier, pairs with no y dropped. The L
+    lags ride ONE window pass over the series, explode to long
+    (lag, x, y) form and reduce in one combinable aggregate keyed on
+    lag; every moment is a BIGINT sum."""
+    w = Window.orderBy("day")
+    lagged = series.select(
+        "rev", *[F.lag("rev", k).over(w).alias(f"l{k}") for k in range(1, L + 1)]
+    )
+    pair = [
+        F.struct(
+            F.lit(k).alias("lag"), F.col("rev").alias("x"), F.col(f"l{k}").alias("y")
+        )
+        for k in range(1, L + 1)
+    ]
+    pairs = (
+        lagged.select(F.explode(F.array(*pair)).alias("p"))
+        .select("p.lag", "p.x", "p.y")
+        .filter(F.col("y").isNotNull())
+    )
+    x, y = F.col("x"), F.col("y")
+    return pairs.groupBy("lag").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(x).cast("bigint").alias("sx"),
+        F.sum(y).cast("bigint").alias("sy"),
+        F.sum(x * y).cast("bigint").alias("sxy"),
+        F.sum(x * x).cast("bigint").alias("sx2"),
+        F.sum(y * y).cast("bigint").alias("sy2"),
+    )
+
+
+# Periodogram basis: cos(2πk/P), sin(2πk/P) are minted ONCE in Python
+# and EMBEDDED as double literals in BOTH engines (the splitmix64
+# constant-embedding rule): libm cos/sin may differ across engines in
+# the last ULP, but multiplying the SAME literal by the same integer is
+# bit-identical everywhere.
+_PGRAM_PERIODS: tuple[int, ...] = (2, 3, 4, 6, 8, 12, 24)
+
+
+def _pgram_coefs(p: int) -> tuple[list[float], list[float]]:
+    cos = [_math.cos(2.0 * _math.pi * k / p) for k in range(p)]
+    sin = [_math.sin(2.0 * _math.pi * k / p) for k in range(p)]
+    return cos, sin
+
+
+def _pgram_powers_sql() -> str:
+    """The oracles' twin of pgram_powers, over the `hourly` CTE."""
+    sums = []
+    for p in _PGRAM_PERIODS:
+        for tag, coefs in zip("cs", _pgram_coefs(p)):
+            whens = " ".join(f"WHEN {k} THEN {c!r}" for k, c in enumerate(coefs))
+            sums.append(
+                f"CAST(sum(CAST(floor(x * (CASE (t % {p}) {whens} END)"
+                f" * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS {tag}{p}"
+            )
+    rows = " UNION ALL ".join(
+        f"SELECT CAST({p} AS BIGINT) AS period, c{p} AS sum_cos_nano,"
+        f" s{p} AS sum_sin_nano FROM wide"
+        for p in _PGRAM_PERIODS
+    )
+    return f"""
+            WITH wide AS MATERIALIZED (SELECT {", ".join(sums)} FROM hourly)
+            SELECT period, sum_cos_nano, sum_sin_nano,
+                   CAST(floor(
+                       (CAST(sum_cos_nano AS DOUBLE) / 1000000000.0)
+                     * (CAST(sum_cos_nano AS DOUBLE) / 1000000000.0)
+                     + (CAST(sum_sin_nano AS DOUBLE) / 1000000000.0)
+                     * (CAST(sum_sin_nano AS DOUBLE) / 1000000000.0)
+                     + 0.5) AS BIGINT) AS power_unit
+            FROM ({rows})"""
+
+
+def pgram_powers(hourly: DataFrame) -> DataFrame:
+    """DFT power of an hourly ``(t, x)`` count series at each of
+    ``_PGRAM_PERIODS``: ``(period, sum_cos_nano, sum_sin_nano,
+    power_unit)``. Each x·coef term nano-quantizes at HOUR grain, so
+    both projections are order-free BIGINT sums, and the power fold
+    is spelled once over them. The 14 conditional sums ride ONE 1-row
+    aggregate (there is no cross-branch CSE to make a per-period scan
+    cheap), stacked to one row per period. Headroom: |Σ| ≤ total
+    events × 1e9 ≈ 1e15 ≪ 2^63 at sf0.1 and power_unit ≤ 1e12; past
+    ~1e9 events per series drop the term grain to micro."""
+    aggs = []
+    for p in _PGRAM_PERIODS:
+        for tag, coefs in zip("cs", _pgram_coefs(p)):
+            coef = F.element_at(
+                F.array(*[F.lit(float(v)) for v in coefs]),
+                (F.col("t") % p).cast("int") + 1,
+            )
+            term = F.floor(F.col("x") * coef * F.lit(1000000000.0) + F.lit(0.5))
+            aggs.append(F.sum(term.cast("bigint")).cast("bigint").alias(f"{tag}{p}"))
+    stack_args = []
+    for p in _PGRAM_PERIODS:
+        stack_args += [F.lit(p).cast("bigint"), F.col(f"c{p}"), F.col(f"s{p}")]
+    rows = hourly.agg(*aggs).select(
+        F.stack(F.lit(len(_PGRAM_PERIODS)), *stack_args).alias(
+            "period", "sum_cos_nano", "sum_sin_nano"
+        )
+    )
+    sc = F.col("sum_cos_nano").cast("double") / F.lit(1000000000.0)
+    ss = F.col("sum_sin_nano").cast("double") / F.lit(1000000000.0)
+    return rows.select(
+        "period",
+        "sum_cos_nano",
+        "sum_sin_nano",
+        F.floor(sc * sc + ss * ss + F.lit(0.5)).cast("bigint").alias("power_unit"),
+    )
 
 
 @query(
@@ -135,15 +323,18 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Batch form of F.session_window: gap-and-cumsum — lag() finds session
     starts, a running sum numbers them. One shuffle on user_id; the
-    streaming twin uses F.session_window with a watermark.
+    streaming twin uses F.session_window with a watermark. The gap is
+    compared in microseconds, the timestamps' own precision, as the
+    oracle's ``> INTERVAL 30 MINUTE`` does: epoch seconds would
+    truncate a 30 min + 0.5 s gap to 1800 and keep the session open.
     """
     e = load(spark, sf_dir, "events")
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_run = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev_ts = F.lag("ts").over(w_order)
+    prev_us = F.lag(F.unix_micros("ts")).over(w_order)
     is_new = (
-        prev_ts.isNull()
-        | (F.col("ts").cast("long") - prev_ts.cast("long") > 30 * 60)
+        prev_us.isNull()
+        | (F.unix_micros("ts") - prev_us > 30 * 60 * 1_000_000)
     ).cast("int")
     return (
         e.withColumn("is_new", is_new)
@@ -342,9 +533,9 @@ def retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention triangle: users grouped by first-seen day,
     counted as active per day offset.
 
-    Plan shape (round-2 rewrite, VERDICT r1 #4): pre-reduce events to
-    user-day grain FIRST — ``distinct(user_id, day)`` collapses the event
-    fan-in (|events| rows) to |user-days| before anything else touches it.
+    Plan shape: pre-reduce events to user-day grain FIRST —
+    ``distinct(user_id, day)`` collapses the event fan-in (|events|
+    rows) to |user-days| before anything else touches it.
     ``firsts`` is then a cheap re-aggregate of that same reduced relation
     (min over user-days == min over events), the cohort join is
     co-partitioned on user_id, and because (user_id, day) is already
@@ -545,7 +736,8 @@ def funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("c_ts").alias("cts"))
         # converted-view grain, referenced by BOTH the purchase
         # semi-join and the step-2 count — lazy checkpoint so the
-        # view⋈click range join runs once per action, not twice (r13)
+        # view⋈click range join runs once per action, not twice
+        # (Catalyst does no CSE across the two branches)
         .localCheckpoint(eager=False)
     )
     vcp = vc.join(
@@ -985,35 +1177,9 @@ _ACF_EXPR = f"{_ACF_NUM} / {_ACF_DEN}"
 @query(
     "ts_autocorr",
     oracle=f"""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
-        lagged AS (
-            SELECT rev,
-                   {", ".join(
-                       f"lag(rev, {k}) OVER (ORDER BY day) AS l{k}"
-                       for k in range(1, ACF_MAX_LAG + 1)
-                   )}
-            FROM daily
-        ),
-        pairs AS (
-            {" UNION ALL ".join(
-                f"SELECT {k} AS lag, rev AS x, l{k} AS y FROM lagged "
-                f"WHERE l{k} IS NOT NULL"
-                for k in range(1, ACF_MAX_LAG + 1)
-            )}
-        ),
-        moments AS (
-            SELECT lag, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy,
-                   CAST(sum(x * x) AS BIGINT) AS sx2,
-                   CAST(sum(y * y) AS BIGINT) AS sy2
-            FROM pairs GROUP BY lag
+        moments AS ({_lag_moments_sql(ACF_MAX_LAG)}
         )
         SELECT CAST(lag AS BIGINT) AS lag, n AS n_pairs,
                CAST(floor(({_ACF_EXPR}) * 1000000.0 + 0.5) AS BIGINT)
@@ -1042,43 +1208,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     far below int64 range for any realistic span; the n*sxy products
     are cast to double BEFORE multiplying on both engines.
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    )
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "rev",
-        *[F.lag("rev", k).over(w).alias(f"l{k}") for k in range(1, ACF_MAX_LAG + 1)],
-    )
-    pairs = (
-        lagged.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("lag"),
-                            F.col("rev").alias("x"),
-                            F.col(f"l{k}").alias("y"),
-                        )
-                        for k in range(1, ACF_MAX_LAG + 1)
-                    ]
-                )
-            ).alias("p")
-        )
-        .select("p.lag", "p.x", "p.y")
-        .filter(F.col("y").isNotNull())
-    )
-    moments = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sx2"),
-        F.sum(F.col("y") * F.col("y")).alias("sy2"),
-    )
+    moments = lag_moments(daily_revenue(spark, sf_dir), ACF_MAX_LAG)
     return moments.select(
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").alias("n_pairs"),
@@ -1088,17 +1218,11 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal_decompose",
-    oracle="""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(dayofweek(date_trunc('day', o_orderdate)) AS BIGINT)
-                       AS dow,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1, 2
+    oracle=f"""
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
         trended AS (
-            SELECT day, dow, rev,
+            SELECT day, CAST(dayofweek(day) AS BIGINT) AS dow, rev,
                    CAST(sum(rev) OVER w AS BIGINT) AS s7,
                    count(*) OVER w AS n7
             FROM daily
@@ -1148,12 +1272,9 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     of it. Only the first agg ever sees data-scale input. DuckDB's
     dayofweek (0=Sunday) matches Spark's dayofweek−1.
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    ).withColumn("dow", (F.dayofweek("day") - 1).cast("bigint"))
+    daily = daily_revenue(spark, sf_dir).withColumn(
+        "dow", (F.dayofweek("day") - 1).cast("bigint")
+    )
     w = Window.orderBy("day").rowsBetween(-3, 3)
     trended = daily.select(
         "day",
@@ -2159,35 +2280,9 @@ def _durbin_steps(L: int) -> list[tuple[str, str]]:
 @query(
     "ts_pacf_durbin",
     oracle=f"""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
-        lagged AS (
-            SELECT rev,
-                   {", ".join(
-                       f"lag(rev, {k}) OVER (ORDER BY day) AS l{k}"
-                       for k in range(1, _PACF_L + 1)
-                   )}
-            FROM daily
-        ),
-        pairs AS (
-            {" UNION ALL ".join(
-                f"SELECT {k} AS lag, rev AS x, l{k} AS y FROM lagged "
-                f"WHERE l{k} IS NOT NULL"
-                for k in range(1, _PACF_L + 1)
-            )}
-        ),
-        moments AS (
-            SELECT lag, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy,
-                   CAST(sum(x * x) AS BIGINT) AS sx2,
-                   CAST(sum(y * y) AS BIGINT) AS sy2
-            FROM pairs GROUP BY lag
+        moments AS ({_lag_moments_sql(_PACF_L)}
         ),
         rho AS (
             SELECT {", ".join(
@@ -2248,33 +2343,7 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable day aggregate is the only full-width stage; the lag
     window, moment reduce, pivot, and the entire recursion run on
     calendar-bounded (then single-row) relations."""
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    )
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "rev",
-        *[F.lag("rev", k).over(w).alias(f"l{k}") for k in range(1, _PACF_L + 1)],
-    )
-    pairs = None
-    for k in range(1, _PACF_L + 1):
-        part = lagged.filter(F.col(f"l{k}").isNotNull()).select(
-            F.lit(k).alias("lag"),
-            F.col("rev").alias("x"),
-            F.col(f"l{k}").alias("y"),
-        )
-        pairs = part if pairs is None else pairs.unionAll(part)
-    moments = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sx2"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("sy2"),
-    )
+    moments = lag_moments(daily_revenue(spark, sf_dir), _PACF_L)
     acf_pico = F.floor(
         F.expr(_ACF_EXPR) * F.lit(1000000000000.0) + F.lit(0.5)
     ).cast("bigint")
@@ -2286,23 +2355,19 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(1, _PACF_L + 1)
         ]
     )
-    # Lineage cut: the recursion chains ~20 dependent projections, and
-    # each withColumn re-analyzes the FULL upstream tree (5-lag window
-    # + union + aggregate) — ~2 s of pure planning on a 1-row relation.
-    # Checkpointing the single-row rho caps every re-analysis at one
-    # leaf (measured 2.3 s → ~0.4 s; the ts_theil_sen daily-grain cut).
-    rho = rho.localCheckpoint(eager=False)
-    cur = rho
-    for k in range(1, _PACF_L + 1):
-        cur = cur.withColumn(
-            f"d{k}",
-            F.col(f"r{k}_pico").cast("double") / F.lit(1000000000000.0),
-        )
-    for name, sql in _durbin_steps(_PACF_L):
-        cur = cur.withColumn(name, F.expr(sql))
+    # The recursion is ONE projection whose later columns read earlier
+    # ones by lateral alias, so the tree is analyzed once; a chain of
+    # withColumn calls re-analyzes the whole upstream tree per step.
+    cur = rho.selectExpr(
+        "*",
+        *[
+            f"CAST(r{k}_pico AS DOUBLE) / 1000000000000.0D AS d{k}"
+            for k in range(1, _PACF_L + 1)
+        ],
+        *[f"{sql} AS {name}" for name, sql in _durbin_steps(_PACF_L)],
+    )
     # ONE explode projection, not a 5-branch union — each union branch
-    # would re-analyze the 20-deep projection chain (pure planning
-    # cost on a 1-row relation).
+    # would re-analyze the recursion's projection.
     return (
         cur.select(
             F.explode(
@@ -2750,11 +2815,7 @@ _LB_Q = (
 @query(
     "ts_ljung_box",
     oracle=f"""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
         tot AS (
             SELECT CAST(count(*) AS BIGINT) AS ndays,
@@ -2762,27 +2823,7 @@ _LB_Q = (
                    CAST(sum(rev * rev) AS BIGINT) AS sx2tot
             FROM daily
         ),
-        lagged AS (
-            SELECT rev,
-                   {", ".join(
-                       f"lag(rev, {k}) OVER (ORDER BY day) AS l{k}"
-                       for k in range(1, ACF_MAX_LAG + 1)
-                   )}
-            FROM daily
-        ),
-        pairs AS (
-            {" UNION ALL ".join(
-                f"SELECT {k} AS lag, rev AS x, l{k} AS y FROM lagged "
-                f"WHERE l{k} IS NOT NULL"
-                for k in range(1, ACF_MAX_LAG + 1)
-            )}
-        ),
-        moments AS (
-            SELECT lag, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy
-            FROM pairs GROUP BY lag
+        moments AS ({_lag_moments_sql(ACF_MAX_LAG)}
         ),
         terms AS (
             SELECT CAST(lag AS BIGINT) AS lag, n,
@@ -2825,50 +2866,13 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is the map-side-combinable daily rollup; lags ride one
     window pass over the ~10^3-row series; the 1-row total relation
     cross-joins (broadcast) into 7-row lag grain."""
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    )
+    daily = daily_revenue(spark, sf_dir)
     tot = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("ndays"),
         F.sum("rev").cast("bigint").alias("stot"),
         F.sum(F.col("rev") * F.col("rev")).cast("bigint").alias("sx2tot"),
     )
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "rev",
-        *[
-            F.lag("rev", k).over(w).alias(f"l{k}")
-            for k in range(1, ACF_MAX_LAG + 1)
-        ],
-    )
-    pairs = (
-        lagged.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("lag"),
-                            F.col("rev").alias("x"),
-                            F.col(f"l{k}").alias("y"),
-                        )
-                        for k in range(1, ACF_MAX_LAG + 1)
-                    ]
-                )
-            ).alias("p")
-        )
-        .select("p.lag", "p.x", "p.y")
-        .filter(F.col("y").isNotNull())
-    )
-    moments = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-    )
-    terms = moments.crossJoin(F.broadcast(tot)).select(
+    terms = lag_moments(daily, ACF_MAX_LAG).crossJoin(F.broadcast(tot)).select(
         F.col("lag").cast("bigint").alias("lag"),
         "n",
         micro(F.expr(_LB_RHO)).alias("rho_micro"),
@@ -2919,12 +2923,8 @@ _HU_SCALES = (1, 2, 4, 8, 16)
     "ts_hurst_exponent",
     oracle=f"""
         WITH daily AS (
-            SELECT CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev,
-                   row_number() OVER (
-                       ORDER BY date_trunc('day', o_orderdate)) - 1
-                       AS rn
-            FROM orders GROUP BY date_trunc('day', o_orderdate)
+            SELECT rev, row_number() OVER (ORDER BY day) - 1 AS rn
+            FROM ({_DAILY_REVENUE_SQL})
         ),
         tot AS (
             SELECT CAST(sum(rev) // count(*) AS BIGINT) AS c
@@ -3004,26 +3004,17 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     (time-span cardinality, not rows); the 5 scales ride UNION ALL
     re-aggregations of that tiny series (incomplete tail blocks
     dropped — cnt = m); the 1-row fit broadcast-cross-joins back to
-    5-row scale grain. The daily series is a LAZY localCheckpoint
-    (r13): without it each of the 5 UNION legs plus the global-mean
-    aggregate re-derived the orders scan, the day rollup AND the
-    single-partition row-number window — 12 orders scans and 6 global
-    sorts in the compiled tree."""
-    o = load(spark, sf_dir, "orders")
+    5-row scale grain. The numbered daily series is a LAZY
+    localCheckpoint because six branches read it (the 5 UNION legs and
+    the global-mean aggregate): Catalyst does no CSE across branches, so
+    without the cut each one re-derives the orders scan, the day rollup
+    AND the single-partition row-number window — 12 orders scans and 6
+    global sorts in the compiled tree."""
     daily = (
-        o.groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("rev")
-        )
+        daily_revenue(spark, sf_dir)
         .select(
             "rev",
-            (F.row_number().over(Window.orderBy("day")) - F.lit(1)).alias(
-                "rn"
-            ),
+            (F.row_number().over(Window.orderBy("day")) - F.lit(1)).alias("rn"),
         )
         .localCheckpoint(eager=False)
     )
@@ -3179,7 +3170,7 @@ def seq_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("fv"))
         # user-grain first-view, referenced by the purchase join AND
         # the latency left join — lazy checkpoint so the events
-        # scan + rollup compiles once (r13 re-derivation sweep)
+        # scan + rollup compiles once, not once per branch
         .localCheckpoint(eager=False)
     )
     p = (
@@ -3229,16 +3220,10 @@ _SS_FT = f"greatest(0.0, 1.0 - {_SS_VR} / {_SS_VT})"
 @query(
     "ts_seasonal_strength",
     oracle=f"""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(dayofweek(date_trunc('day', o_orderdate))
-                        AS BIGINT) AS dow,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1, 2
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
         trended AS (
-            SELECT day, dow, rev,
+            SELECT day, CAST(dayofweek(day) AS BIGINT) AS dow, rev,
                    CAST(sum(rev) OVER w AS BIGINT) AS s7,
                    count(*) OVER w AS n7
             FROM daily
@@ -3315,21 +3300,10 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: combinable daily rollup -> one ROWS window over the tiny
     series -> 7-row seasonal means join back -> ONE moments reduce.
     Nothing past the first agg scales with input rows."""
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("day"),
-        F.dayofweek(F.date_trunc("day", "o_orderdate"))
-        .cast("bigint")
-        .alias("dow"),
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    )
     w = Window.orderBy("day").rowsBetween(-3, 3)
-    trended = daily.select(
+    trended = daily_revenue(spark, sf_dir).select(
         "day",
-        "dow",
+        F.dayofweek("day").cast("bigint").alias("dow"),
         "rev",
         F.sum("rev").over(w).cast("bigint").alias("s7"),
         F.count(F.lit(1)).over(w).alias("n7"),
@@ -3399,17 +3373,11 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_anomaly_residual",
-    oracle="""
-        WITH daily AS (
-            SELECT date_trunc('day', o_orderdate) AS day,
-                   CAST(dayofweek(date_trunc('day', o_orderdate))
-                        AS BIGINT) AS dow,
-                   CAST(sum(CAST(floor(o_totalprice + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM orders GROUP BY 1, 2
+    oracle=f"""
+        WITH daily AS ({_DAILY_REVENUE_SQL}
         ),
         trended AS (
-            SELECT day, dow, rev,
+            SELECT day, CAST(dayofweek(day) AS BIGINT) AS dow, rev,
                    CAST(sum(rev) OVER w AS BIGINT) AS s7,
                    count(*) OVER w AS n7
             FROM daily
@@ -3474,25 +3442,15 @@ def ts_anomaly_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     series -> 7-row seasonal join-back -> two discrete quantiles over
     the series-length relation with 1-row broadcast-backs. Output is
     anomaly-sized. detrended and resid are LAZY localCheckpoints
-    (r13): without them the compiled tree re-derived the orders scan,
-    daily rollup and trend window at every reference (seasonal + the
-    resid join, then med/madr/final over resid) — 8 orders scans and
-    as many global window sorts."""
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("day"),
-        F.dayofweek(F.date_trunc("day", "o_orderdate"))
-        .cast("bigint")
-        .alias("dow"),
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("rev")
-    )
+    because each is read from several branches (seasonal + the resid
+    join, then med/madr/final over resid) and Catalyst does no CSE
+    across branches: without the cuts the compiled tree re-derives the
+    orders scan, daily rollup and trend window at every reference — 8
+    orders scans and as many global window sorts."""
     w = Window.orderBy("day").rowsBetween(-3, 3)
-    trended = daily.select(
+    trended = daily_revenue(spark, sf_dir).select(
         "day",
-        "dow",
+        F.dayofweek("day").cast("bigint").alias("dow"),
         "rev",
         F.sum("rev").over(w).cast("bigint").alias("s7"),
         F.count(F.lit(1)).over(w).alias("n7"),
@@ -3631,76 +3589,18 @@ def agg_fano_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-# --- periodogram (Goertzel-style DFT power at fixed candidate periods) ----
-# Basis coefficients cos(2πk/P), sin(2πk/P) are minted ONCE in Python
-# and EMBEDDED as double literals in BOTH engines (the splitmix64
-# constant-embedding rule): libm cos/sin may differ across engines in
-# the last ULP, but multiplying the SAME literal by the same integer is
-# bit-identical everywhere.
-_PGRAM_PERIODS: tuple[int, ...] = (2, 3, 4, 6, 8, 12, 24)
-
-
-def _pgram_coefs(p: int) -> tuple[list[float], list[float]]:
-    import math
-
-    cos = [math.cos(2.0 * math.pi * k / p) for k in range(p)]
-    sin = [math.sin(2.0 * math.pi * k / p) for k in range(p)]
-    return cos, sin
-
-
-def _pgram_case_sql(p: int, coefs: list[float]) -> str:
-    whens = " ".join(
-        f"WHEN {k} THEN {c!r}" for k, c in enumerate(coefs)
-    )
-    return f"CASE (t % {p}) {whens} END"
-
-
-def _pgram_oracle() -> str:
-    sums = []
-    for p in _PGRAM_PERIODS:
-        cos, sin = _pgram_coefs(p)
-        for tag, coefs in (("c", cos), ("s", sin)):
-            sums.append(
-                f"CAST(sum(CAST(floor(x * ({_pgram_case_sql(p, coefs)})"
-                f" * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT)"
-                f" AS {tag}{p}"
-            )
-    branches = " UNION ALL ".join(
-        f"SELECT {p} AS period, c{p} AS sum_cos_nano, s{p} AS sum_sin_nano"
-        f" FROM wide"
-        for p in _PGRAM_PERIODS
-    )
-    return f"""
-        WITH hourly AS (
-            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS t,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1
+@query(
+    "ts_periodogram",
+    oracle=f"""
+        WITH hourly AS ({_event_counts_sql(_HOUR_US)}
         ),
-        wide AS MATERIALIZED (
-            SELECT {", ".join(sums)} FROM hourly
-        ),
-        rows_ AS ({branches}),
-        powered AS (
-            SELECT period, sum_cos_nano, sum_sin_nano,
-                   CAST(floor(
-                       (CAST(sum_cos_nano AS DOUBLE) / 1000000000.0)
-                     * (CAST(sum_cos_nano AS DOUBLE) / 1000000000.0)
-                     + (CAST(sum_sin_nano AS DOUBLE) / 1000000000.0)
-                     * (CAST(sum_sin_nano AS DOUBLE) / 1000000000.0)
-                     + 0.5) AS BIGINT) AS power_unit
-            FROM rows_
+        powered AS ({_pgram_powers_sql()}
         )
-        SELECT CAST(period AS BIGINT) AS period,
-               sum_cos_nano, sum_sin_nano, power_unit,
+        SELECT period, sum_cos_nano, sum_sin_nano, power_unit,
                power_unit = max(power_unit) OVER () AS is_dominant
         FROM powered
         ORDER BY period
-    """
-
-
-@query(
-    "ts_periodogram",
-    oracle=_pgram_oracle(),
+    """,
     phase="P4",
     tags=("timeseries", "spectral", "seasonality"),
 )
@@ -3713,67 +3613,11 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dominant-period flag drives downstream window sizing
     (stream_tumbling's width, feed-gap expectations).
 
-    Exactness: the trig basis is minted once in Python and embedded
-    as double literals in BOTH engines (libm cos/sin may differ in
-    the last ULP across engines; multiplying the same literal is
-    bit-identical); each x·coef term nano-quantizes at HOUR grain so
-    both projections are order-free BIGINT sums; the power fold is
-    spelled once over the quantized sums. Headroom: |Σ| ≤ total
-    events × 1e9 ≈ 1e15 ≪ 2^63 at sf0.1; power_unit ≤ 1e12 — at
-    corpus scales past ~1e9 events/hour-span drop the term grain to
-    micro.
-
-    Plan: ONE combinable hour-grain aggregate over the scan, then 14
-    conditional sums in ONE 1-row aggregate (no per-period rescan —
-    cross-branch CSE does not exist), unpivoted to 7 rows; the
-    dominant flag is a window over those 7."""
-    e = load(spark, sf_dir, "events")
-    hourly = (
-        e.select(
-            (F.unix_micros(F.col("ts")) / F.lit(3600000000))
-            .cast("bigint")
-            .alias("t")
-        )
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    aggs = []
-    for p in _PGRAM_PERIODS:
-        cos, sin = _pgram_coefs(p)
-        for tag, coefs in (("c", cos), ("s", sin)):
-            coef = F.element_at(
-                F.array(*[F.lit(float(v)) for v in coefs]),
-                (F.col("t") % p).cast("int") + 1,
-            )
-            aggs.append(
-                F.sum(
-                    F.floor(
-                        F.col("x") * coef * F.lit(1000000000.0)
-                        + F.lit(0.5)
-                    ).cast("bigint")
-                )
-                .cast("bigint")
-                .alias(f"{tag}{p}")
-            )
-    wide = hourly.agg(*aggs)
-    stack_args = []
-    for p in _PGRAM_PERIODS:
-        stack_args += [F.lit(p).cast("bigint"), F.col(f"c{p}"), F.col(f"s{p}")]
-    rows = wide.select(
-        F.stack(
-            F.lit(len(_PGRAM_PERIODS)), *stack_args
-        ).alias("period", "sum_cos_nano", "sum_sin_nano")
-    )
-    sc = F.col("sum_cos_nano").cast("double") / F.lit(1000000000.0)
-    ss = F.col("sum_sin_nano").cast("double") / F.lit(1000000000.0)
-    powered = rows.select(
-        "period",
-        "sum_cos_nano",
-        "sum_sin_nano",
-        F.floor(sc * sc + ss * ss + F.lit(0.5))
-        .cast("bigint")
-        .alias("power_unit"),
-    )
+    Exactness and plan: ``pgram_powers`` over ``event_counts`` at hour
+    grain (Python-minted trig literals, nano-quantized hour-grain
+    terms, one 1-row aggregate stacked to 7 rows); the dominant flag
+    is a window over those 7."""
+    powered = pgram_powers(event_counts(spark, sf_dir, _HOUR_US))
     w = Window.partitionBy()
     return powered.select(
         "period",
@@ -3801,16 +3645,13 @@ _MK_Z = (
 @query(
     "ts_mann_kendall",
     oracle=f"""
-        WITH daily AS (
-            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1
+        WITH daily AS ({_event_counts_sql(_DAY_US)}
         ),
         s AS (
             SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1
                                  WHEN b.x < a.x THEN -1
                                  ELSE 0 END) AS BIGINT) AS s_stat
-            FROM daily a JOIN daily b ON a.d < b.d
+            FROM daily a JOIN daily b ON a.t < b.t
         ),
         ties AS (
             SELECT CAST(coalesce(sum(t * (t - 1) * (2 * t + 5)), 0)
@@ -3861,19 +3702,10 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a ≤(days)² broadcast self-join and 1-row folds — at a year
     of daily grain that is 365² = 133k integer compares, constant
     regardless of corpus size."""
-    e = load(spark, sf_dir, "events")
-    daily = (
-        e.select(
-            (F.unix_micros(F.col("ts")) / F.lit(86400000000))
-            .cast("bigint")
-            .alias("d")
-        )
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    ).localCheckpoint(eager=True)
+    daily = event_counts(spark, sf_dir, _DAY_US).localCheckpoint(eager=True)
     a = daily.alias("a")
     b = F.broadcast(daily.alias("b"))  # day-grain side; ckpt size opaque
-    s = a.join(b, F.col("a.d") < F.col("b.d")).agg(
+    s = a.join(b, F.col("a.t") < F.col("b.t")).agg(
         F.sum(
             F.when(F.col("b.x") > F.col("a.x"), F.lit(1))
             .when(F.col("b.x") < F.col("a.x"), F.lit(-1))
@@ -4342,13 +4174,11 @@ def seq_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- circadian (circular) activity profile (r10) ----------------------------
+# --- circadian (circular) activity profile --------------------------------
 
 # hour-of-day unit circle, minted ONCE in Python and embedded as double
-# literals in BOTH engines (the ts_periodogram lesson: libm cos/sin ULPs
-# differ across engines; repr() round-trips the exact double)
-import math as _math
-
+# literals in BOTH engines (libm cos/sin ULPs differ across engines, as
+# for the periodogram basis; repr() round-trips the exact double)
 _CIRC_COS = [_math.cos(2.0 * _math.pi * h / 24.0) for h in range(24)]
 _CIRC_SIN = [_math.sin(2.0 * _math.pi * h / 24.0) for h in range(24)]
 _CIRC_COS_SQL = "[" + ", ".join(repr(c) for c in _CIRC_COS) + "]"
@@ -4462,44 +4292,18 @@ def ts_circadian_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-# --- spectral entropy of the periodogram (r10) -------------------------------
+# --- spectral entropy of the periodogram -----------------------------------
 
 _SPECENT_LN_K = repr(_math.log(float(len(_PGRAM_PERIODS))))
 
 
-def _specent_oracle() -> str:
-    sums = []
-    for p in _PGRAM_PERIODS:
-        cos, sin = _pgram_coefs(p)
-        for tag, coefs in (("c", cos), ("s", sin)):
-            sums.append(
-                f"CAST(sum(CAST(floor(x * ({_pgram_case_sql(p, coefs)})"
-                f" * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT)"
-                f" AS {tag}{p}"
-            )
-    branches = " UNION ALL ".join(
-        f"SELECT {p} AS period, c{p} AS sc, s{p} AS ss FROM wide"
-        for p in _PGRAM_PERIODS
-    )
-    return f"""
-        WITH hourly AS (
-            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS t,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1
+@query(
+    "ts_spectral_entropy",
+    oracle=f"""
+        WITH hourly AS ({_event_counts_sql(_HOUR_US)}
         ),
-        wide AS MATERIALIZED (
-            SELECT {", ".join(sums)} FROM hourly
-        ),
-        rows_ AS ({branches}),
         powered AS (
-            SELECT period,
-                   CAST(floor(
-                       (CAST(sc AS DOUBLE) / 1000000000.0)
-                     * (CAST(sc AS DOUBLE) / 1000000000.0)
-                     + (CAST(ss AS DOUBLE) / 1000000000.0)
-                     * (CAST(ss AS DOUBLE) / 1000000000.0)
-                     + 0.5) AS BIGINT) AS pw
-            FROM rows_
+            SELECT power_unit AS pw FROM ({_pgram_powers_sql()})
         ),
         tot AS (SELECT CAST(sum(pw) AS BIGINT) AS total FROM powered),
         terms AS (
@@ -4520,12 +4324,7 @@ def _specent_oracle() -> str:
                    AS entropy_norm_micro,
                CAST(max(share_micro) AS BIGINT) AS peak_share_micro
         FROM terms
-    """
-
-
-@query(
-    "ts_spectral_entropy",
-    oracle=_specent_oracle(),
+    """,
     phase="P4",
     tags=("timeseries", "spectral", "seasonality"),
 )
@@ -4545,54 +4344,11 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free integer sum; the normalizing ln(7) is a Python-minted
     repr literal, never engine libm at a bare double.
 
-    Plan: identical single-pass shape as ts_periodogram (one
-    combinable hour-grain agg → 14 conditional sums in one 1-row
-    aggregate) with a 7-row entropy reduce on top — the spectrum
-    costs one scan regardless of corpus size."""
-    e = load(spark, sf_dir, "events")
-    hourly = (
-        e.select(
-            (F.unix_micros(F.col("ts")) / F.lit(3600000000))
-            .cast("bigint")
-            .alias("t")
-        )
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    aggs = []
-    for p in _PGRAM_PERIODS:
-        cos, sin = _pgram_coefs(p)
-        for tag, coefs in (("c", cos), ("s", sin)):
-            coef = F.element_at(
-                F.array(*[F.lit(float(v)) for v in coefs]),
-                (F.col("t") % p).cast("int") + 1,
-            )
-            aggs.append(
-                F.sum(
-                    F.floor(
-                        F.col("x") * coef * F.lit(1000000000.0)
-                        + F.lit(0.5)
-                    ).cast("bigint")
-                )
-                .cast("bigint")
-                .alias(f"{tag}{p}")
-            )
-    wide = hourly.agg(*aggs)
-    stack_args = []
-    for p in _PGRAM_PERIODS:
-        stack_args += [F.lit(p).cast("bigint"), F.col(f"c{p}"), F.col(f"s{p}")]
-    rows = wide.select(
-        F.stack(F.lit(len(_PGRAM_PERIODS)), *stack_args).alias(
-            "period", "sc", "ss"
-        )
-    )
-    scd = F.col("sc").cast("double") / F.lit(1000000000.0)
-    ssd = F.col("ss").cast("double") / F.lit(1000000000.0)
-    powered = rows.select(
-        "period",
-        F.floor(scd * scd + ssd * ssd + F.lit(0.5))
-        .cast("bigint")
-        .alias("pw"),
+    Plan: ts_periodogram's single-pass ``pgram_powers`` with a 7-row
+    entropy reduce on top — the spectrum costs one scan regardless of
+    corpus size."""
+    powered = pgram_powers(event_counts(spark, sf_dir, _HOUR_US)).select(
+        F.col("power_unit").alias("pw")
     )
     w_tot = Window.partitionBy()
     terms = powered.select(
@@ -4626,7 +4382,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- dynamic time warping between event-type series (r10) --------------------
+# --- dynamic time warping between event-type series ------------------------
 
 _DTW_DAYS = 32  # fixed window: first 32 days from the corpus min day
 
@@ -4849,10 +4605,7 @@ _PERMENT_LN6 = repr(_math.log(6.0))
 @query(
     "ts_permutation_entropy",
     oracle=f"""
-        WITH hourly AS (
-            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS t,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1
+        WITH hourly AS ({_event_counts_sql(_HOUR_US)}
         ),
         trip AS (
             SELECT x AS a,
@@ -4913,16 +4666,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus size — hours, not events), one lead window over that
     reduced grain, a 6-row pattern census. The corpus is scanned
     once; everything after the first aggregate is fixed-size."""
-    e = load(spark, sf_dir, "events")
-    hourly = (
-        e.select(
-            (F.unix_micros(F.col("ts")) / F.lit(3600000000))
-            .cast("bigint")
-            .alias("t")
-        )
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
+    hourly = event_counts(spark, sf_dir, _HOUR_US)
     w_t = Window.orderBy("t")
     trip = hourly.select(
         F.col("x").alias("a"),
@@ -5079,10 +4823,7 @@ def _vr_oracle() -> str:
         for q in _VR_LAGS
     )
     return f"""
-        WITH hourly AS (
-            SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS t,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1
+        WITH hourly AS ({_event_counts_sql(_HOUR_US)}
         ),
         diffs AS (
             SELECT {", ".join(
@@ -5130,16 +4871,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size), ONE lead window at that reduced grain computing all
     four lags, one 1-row wide moments aggregate, a 3-row stack — the
     corpus is scanned once and everything downstream is fixed-size."""
-    e = load(spark, sf_dir, "events")
-    hourly = (
-        e.select(
-            (F.unix_micros(F.col("ts")) / F.lit(3600000000))
-            .cast("bigint")
-            .alias("t")
-        )
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
+    hourly = event_counts(spark, sf_dir, _HOUR_US)
     w_t = Window.orderBy("t")
     lags = (1,) + _VR_LAGS
     diffs = hourly.select(

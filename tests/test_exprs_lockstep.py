@@ -296,6 +296,29 @@ def _event_type_lead(node):
     )
 
 
+def _home_lines(tree, homes):
+    """Line numbers of the top-level defs and assignments named in
+    ``homes``."""
+    home = set()
+    for stmt in tree.body:
+        targets = getattr(stmt, "targets", [])
+        names = [getattr(stmt, "name", None)] + [
+            t.id for t in targets if isinstance(t, ast.Name)
+        ]
+        if homes.intersection(names):
+            home.update(range(stmt.lineno, stmt.end_lineno + 1))
+    return home
+
+
+def _text_lines(src, patterns):
+    """Line numbers of each match of ``patterns`` in ``src``."""
+    return {
+        src.count("\n", 0, m.start()) + 1
+        for pattern in patterns
+        for m in pattern.finditer(src)
+    }
+
+
 def hand_written_edge_lists(py):
     """file:line of each edge list in ``py`` built outside
     ``_EDGE_LIST_HOMES``. Co-purchase: a ``.join`` / ``.filter`` /
@@ -305,14 +328,7 @@ def hand_written_edge_lists(py):
     and each ``lead(event_type) OVER`` in the source text."""
     src = py.read_text()
     tree = ast.parse(src)
-    home = set()
-    for stmt in tree.body:
-        targets = getattr(stmt, "targets", [])
-        names = [getattr(stmt, "name", None)] + [
-            t.id for t in targets if isinstance(t, ast.Name)
-        ]
-        if _EDGE_LIST_HOMES.intersection(names):
-            home.update(range(stmt.lineno, stmt.end_lineno + 1))
+    home = _home_lines(tree, _EDGE_LIST_HOMES)
     lines = set()
     for node in ast.walk(tree):
         if _event_type_lead(node):
@@ -324,9 +340,7 @@ def hand_written_edge_lists(py):
         ):
             for arg in node.args + [k.value for k in node.keywords]:
                 lines.update(n.lineno for n in ast.walk(arg) if _partkey_lt(n))
-    for pattern in (_LINEITEM_SELF_JOIN_SQL, _TRANSITION_LEAD_SQL):
-        for m in pattern.finditer(src):
-            lines.add(src.count("\n", 0, m.start()) + 1)
+    lines |= _text_lines(src, (_LINEITEM_SELF_JOIN_SQL, _TRANSITION_LEAD_SQL))
     where = py.relative_to(py.parents[2])
     return [f"{where}:{line}" for line in sorted(lines - home)]
 
@@ -383,5 +397,65 @@ def test_degree_counts_only_through_helper():
     hits = hand_written_degree_counts(PACKAGE / "operators" / "graph.py")
     assert not hits, (
         f"{len(hits)} hand-written degree counts; call graph.degrees instead:\n"
+        + "\n".join(hits)
+    )
+
+
+_SERIES_HOMES = {
+    "daily_revenue", "_DAILY_REVENUE_SQL",
+    "event_counts", "_event_counts_sql",
+    "lag_moments", "_lag_moments_sql",
+    "pgram_powers", "_pgram_powers_sql",
+}
+_SERIES_SQL = (
+    re.compile(r"date_trunc\(\s*'day'\s*,\s*o_orderdate\s*\)"),
+    re.compile(r"epoch_us\(\s*CAST\(\s*ts AS TIMESTAMP\s*\)\s*\)\s*//"),
+    re.compile(r"\blag\(\s*rev\s*,"),
+)
+_BUCKETS_US = {3600000000, 86400000000}
+
+
+def _series_by_hand(node):
+    """``node`` spells a time-series input by hand: the daily revenue
+    rollup ``F.date_trunc("day", "o_orderdate")``, an hourly or daily
+    count bucket ``F.unix_micros(...) / <hour or day in µs>``, one
+    ``F.lag`` per lag (a non-literal offset), or the periodogram basis
+    ``_pgram_coefs(...)``."""
+    if _is_f(node, "date_trunc"):
+        return [getattr(a, "value", None) for a in node.args] == ["day", "o_orderdate"]
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Div):
+        return _is_f(node.left, "unix_micros") and _number(node.right) in _BUCKETS_US
+    if _is_f(node, "lag"):
+        return len(node.args) > 1 and _number(node.args[1]) is None
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "_pgram_coefs"
+    )
+
+
+def hand_written_series(py):
+    """file:line of each time-series input in ``py`` built outside
+    ``_SERIES_HOMES``: a ``_series_by_hand`` node, and in the source
+    text (the oracles) each ``date_trunc('day', o_orderdate)``,
+    ``epoch_us(CAST(ts AS TIMESTAMP)) //`` bucket and ``lag(rev, ...``."""
+    src = py.read_text()
+    tree = ast.parse(src)
+    lines = {n.lineno for n in ast.walk(tree) if _series_by_hand(n)}
+    lines |= _text_lines(src, _SERIES_SQL)
+    where = py.relative_to(py.parents[2])
+    return [f"{where}:{n}" for n in sorted(lines - _home_lines(tree, _SERIES_HOMES))]
+
+
+def test_time_series_inputs_only_through_helpers():
+    """event_windows.py reads the daily revenue series, the hourly and
+    daily event counts, the per-lag pair moments and the periodogram
+    powers only through ``daily_revenue``, ``event_counts``,
+    ``lag_moments`` and ``pgram_powers``, and its oracles only through
+    their SQL twins, so each series is spelled once per engine."""
+    hits = hand_written_series(PACKAGE / "streaming" / "event_windows.py")
+    assert not hits, (
+        f"{len(hits)} hand-written time-series inputs; call the helpers at "
+        "the top of event_windows.py or their SQL twins instead:\n"
         + "\n".join(hits)
     )

@@ -1,4 +1,5 @@
-"""The driver JVM is sized to the Spark slots that get_spark gives it."""
+"""The driver JVM is sized to the Spark slots that get_spark gives it,
+and builders that scope session conf put it back as they found it."""
 
 from __future__ import annotations
 
@@ -6,6 +7,10 @@ import json
 import os
 import subprocess
 import sys
+
+import pytest
+
+from data_integration_tool_spark.session import scoped_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,3 +56,18 @@ def test_driver_jvm_sized_to_spark_slots(spark, tmp_path):
     slots = int(cpus) if cpus.isdigit() else usable
     runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
     assert runtime.availableProcessors() == min(slots, usable)
+
+
+def test_scoped_conf_unsets_unset_keys_and_restores_set_ones(spark):
+    """After the block, also one that raises, a key that was unset is
+    unset again, not pinned to the default ``spark.conf.get`` shows
+    for it, and a key that was set has its old value back."""
+    unset, preset = "spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions"
+    assert spark.conf.get(unset, None) is None
+    before = spark.conf.get(preset)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {unset: "-1", preset: "3"}):
+            assert (spark.conf.get(unset), spark.conf.get(preset)) == ("-1", "3")
+            raise RuntimeError("the block failed")
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(preset) == before

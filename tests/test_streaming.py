@@ -6,14 +6,20 @@ micro-batches through the incremental engine)."""
 from __future__ import annotations
 
 import math
+import os
 import tempfile
+from datetime import datetime, timedelta
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_tool_spark.io import load
+from data_integration_tool_spark import registry
+from data_integration_tool_spark.io import TABLES, load
 from data_integration_tool_spark.streaming import structured
 from data_integration_tool_spark.streaming.event_windows import stream_tumbling
+from .oracle_check import compare_frames, duck_connect
 
 
 @pytest.fixture(scope="module")
@@ -213,3 +219,38 @@ def test_stream_session_true_reconciles(collected):
     row = collected("stream_session_true")[1][0]
     assert row.all_match is True
     assert row.n_stream == row.n_batch == row.n_sessions > 0
+
+
+def test_stream_session_splits_gaps_past_30_minutes_exactly(spark, sf_dir, tmp_path):
+    """A gap of exactly 30 minutes keeps the session open and any longer
+    one, by half a second too, starts a new one, on Spark as in the
+    oracle's ``> INTERVAL 30 MINUTE``. Epoch seconds would truncate
+    the 30 min + 0.5 s gap to 1800 and keep one session there."""
+    t0 = datetime(2024, 1, 1)
+    gaps = {1: 0.0, 2: 0.5, 3: 1.0}  # user -> seconds past 30 minutes
+    rows = []
+    for user, extra in gaps.items():
+        for i, ts in enumerate(
+            [t0, t0 + timedelta(minutes=30, seconds=extra), t0 + timedelta(hours=3)]
+        ):
+            rows.append((10 * user + i, ts, user, "view", float(i), "{}"))
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(cols[0], pa.int64()),
+            "ts": pa.array(cols[1], pa.timestamp("us")),
+            "user_id": pa.array(cols[2], pa.int64()),
+            "event_type": pa.array(cols[3], pa.string()),
+            "value": pa.array(cols[4], pa.float64()),
+            "props": pa.array(cols[5], pa.string()),
+        }),
+        tmp_path / "events.parquet",
+    )
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    spec = registry.specs()["stream_session"]
+    got = spec.builder(spark, str(tmp_path)).toPandas()
+    want = duck_connect(str(tmp_path)).execute(spec.oracle).fetchdf()
+    assert not compare_frames(got, want, "stream_session")
+    assert got.groupby("user_id").size().to_dict() == {1: 2, 2: 3, 3: 3}
